@@ -21,8 +21,102 @@ object Tables {
     * linearly with SF and must be left to AQE's cost-based choice. */
   val broadcastableDims: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table as a DataFrame, read with the parquet schema Spark infers
+    * for it.
+    *
+    * Inferring a parquet schema costs one Spark job (a footer read) per
+    * `spark.read.parquet`, and every query builds its DataFrames through
+    * here. So the inferred schema is memoized and later loads read with
+    * `spark.read.schema(memo)`, which submits no job. A memo entry is
+    * keyed on the table path and the session's schema-conversion confs
+    * ([[SchemaConfs]]); it holds the fingerprint of the files it was
+    * inferred from and is used only while the reader still lists those
+    * files. A table rewritten in place is re-inferred on its next load.
+    * The fingerprint is taken from the listing the reader builds anyway
+    * (its file index), so a load lists the table once. The schema
+    * itself always comes from Spark's own inference, never from a
+    * hand conversion of footer schemas. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, SchemaConfs.map(spark.conf.getOption))
+    schemaMemo.latest(key)
+      .map { case (state, schema) => (state, spark.read.schema(schema).parquet(path)) }
+      .collect { case (state, df) if readerState(df).contains(state) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        readerState(df).foreach(schemaMemo.getOrElseUpdate(key, _)(df.schema))
+        df
+      }
+  }
+
+  /** Session confs that change the schema Spark infers from the same
+    * parquet files; part of every [[load]] memo key. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private val schemaMemo =
+    new StateMemo[(String, Seq[Option[String]]), org.apache.spark.sql.types.StructType]
+
+  /** Fingerprint of the files a parquet read's file index listed, or
+    * None when the read is not a file-index relation. */
+  private def readerState(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation
+    }.collect {
+      case h: HadoopFsRelation => h.location
+    }.collect {
+      case index: PartitioningAwareFileIndex => fingerprint(index.allFiles())
+    }
+  }
+
+  /** One table state: path, length and modification time of every leaf
+    * file, in path order, hashed. Rewriting a table in place changes at
+    * least one of the three, so every memo here keys its entries on
+    * this. */
+  private def fingerprint(files: Seq[org.apache.hadoop.fs.FileStatus]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
+      .foreach { s => md.update(s.getBytes("UTF-8")); md.update(0.toByte) }
+    s"${files.length}:" + md.digest().map(b => f"$b%02x").mkString
+  }
+
+  /** A memo of values derived from one table state: each key holds the
+    * fingerprint its value was derived from, and a lookup with any
+    * other fingerprint misses. Past [[MemoMaxEntries]] keys it starts
+    * over; every value is one footer read or one inference job away. */
+  private final class StateMemo[K, V] {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[K, (String, V)]()
+    def latest(key: K): Option[(String, V)] = Option(entries.get(key))
+    /** The value for `key` at `state`, derived at most once: concurrent
+      * callers of one key wait for the first derivation. */
+    def getOrElseUpdate(key: K, state: String)(value: => V): V = {
+      if (entries.size >= MemoMaxEntries) entries.clear()
+      entries.compute(key, (_, old) =>
+        if (old != null && old._1 == state) old else (state, value))._2
+    }
+  }
+
+  private val MemoMaxEntries = 64
+
+  /** A table's leaf `.parquet` files from one driver listing, with the
+    * Hadoop conf it was listed under — the input of every footer probe
+    * below and of [[parquetBytes]]. */
+  private[graft] final case class Listing(root: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+
+  private[graft] def listing(spark: SparkSession, dir: String, name: String): Listing = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    Listing(root, conf, leafParquetFiles(root.getFileSystem(conf), root))
+  }
 
   /** Exact row count of a table from parquet FOOTER metadata only (the
     * same footer reads the scan planner performs), no data pages
@@ -30,24 +124,16 @@ object Tables {
     * time (a sampling stride, autoNLists' ⌈√n⌉) without an eager
     * count() scan.
     *
-    * Driver-stall hygiene (round 12 — the column-range probe's rules,
-    * adapted: a row count has no conservative None path, so instead of
-    * capping it DISTRIBUTES): MEMOIZED per listing fingerprint (one
-    * listing, no footer opens on a repeat call); up to
-    * [[FooterProbeMaxFiles]] leaf files the footers open serially on
-    * the driver (~ms each); past that — the 10⁵-file shape of a 100 TB
-    * table — the footer reads run as ONE executor job (r01's
-    * distributed footer count, Tables' sibling), so the driver never
-    * serializes minutes of remote opens. */
+    * Memoized per table state (one listing, no footer opens on a repeat
+    * call). Up to [[FooterProbeMaxFiles]] leaf files the footers open
+    * serially on the driver (~ms each); past that — the 10⁵-file shape
+    * of a 100 TB table — the footer reads run as ONE executor job, so
+    * the driver never serializes minutes of remote opens. A row count
+    * has no conservative None answer, so it distributes instead of
+    * capping. */
   def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val files = leafParquetFiles(root.getFileSystem(conf), root)
-    val fprint = files.map(f =>
-      s"${f.getPath}:${f.getLen}:${f.getModificationTime}").mkString("\u0000")
-    val key = (root.toString, fprint.hashCode, files.length)
-    if (rowCountCache.size > 64) rowCountCache.clear()
-    rowCountCache.computeIfAbsent(key, _ =>
+    val Listing(root, conf, files) = listing(spark, dir, name)
+    rowCountMemo.getOrElseUpdate(root.toString, fingerprint(files))(
       if (files.length <= FooterProbeMaxFiles) {
         files.map { f =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
@@ -69,20 +155,16 @@ object Tables {
               try r.getRecordCount finally r.close()
             }
           }.reduce(_ + _)
-      }: java.lang.Long)
+      })
   }
 
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), java.lang.Long]()
+  private val rowCountMemo = new StateMemo[String, Long]
 
   /** Total at-rest bytes of a table's parquet data files — one driver
     * listing (no footer reads, no data pages): the sizing signal for
     * persist-vs-restream policies (d19's occurrence index). */
-  def parquetBytes(spark: SparkSession, dir: String, name: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    leafParquetFiles(root.getFileSystem(conf), root).map(_.getLen).sum
-  }
+  def parquetBytes(spark: SparkSession, dir: String, name: String): Long =
+    listing(spark, dir, name).files.map(_.getLen).sum
 
   /** Footer-statistics (min, max) of an integer column across a table's
     * parquet files — driver-side, no data pages (the same footer the
@@ -92,9 +174,8 @@ object Tables {
     * sizing signal (d19's packed-canonical bit budget).
     *
     * Driver-stall hygiene (this runs on every d19 plan construction):
-    *  - MEMOIZED per (table path, column, listing fingerprint) — the
-    *    fingerprint is one directory listing (paths + lengths + mtimes),
-    *    no footer opens; a rewritten table invalidates naturally.
+    *  - MEMOIZED per (table path, column, table state); a rewritten
+    *    table invalidates naturally.
     *  - SHORT-CIRCUITS on the first row group lacking the stat (the
     *    whole answer is already None — no reason to open the rest).
     *  - CAPPED at [[FooterProbeMaxFiles]] leaf files: a 100 TB table is
@@ -105,15 +186,9 @@ object Tables {
   def parquetLongColumnRange(spark: SparkSession, dir: String, name: String,
       column: String): Option[(Long, Long)] = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val files = leafParquetFiles(root.getFileSystem(conf), root)
+    val Listing(root, conf, files) = listing(spark, dir, name)
     if (files.length > FooterProbeMaxFiles) return None
-    val fprint = files.map(f =>
-      s"${f.getPath}:${f.getLen}:${f.getModificationTime}").mkString("\u0000")
-    val key = (s"$root#$column", fprint.hashCode, files.length)
-    if (columnRangeCache.size > 64) columnRangeCache.clear()
-    columnRangeCache.computeIfAbsent(key, _ => {
+    columnRangeMemo.getOrElseUpdate((root.toString, column), fingerprint(files)) {
       var lo = Long.MaxValue
       var hi = Long.MinValue
       var missing = false
@@ -143,7 +218,7 @@ object Tables {
         } finally r.close()
       }
       if (missing || lo > hi) None else Some((lo, hi))
-    })
+    }
   }
 
   /** Leaf-file cap past which [[parquetLongColumnRange]] answers None
@@ -152,16 +227,13 @@ object Tables {
     * files of a 100 TB table would be minutes of driver stall. */
   val FooterProbeMaxFiles: Int = 1024
 
-  private val columnRangeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Int, Int), Option[(Long, Long)]]()
+  private val columnRangeMemo = new StateMemo[(String, String), Option[(Long, Long)]]
 
   /** Leaf `.parquet` data files under a table root — the ONE
-    * listing-and-filter rule shared by [[parquetRowCount]] and r01's
-    * distributed footer count, so a future listing fix (skipping
-    * `_temporary` dirs, following symlinks) lands in one place instead
-    * of silently diverging between the two counts. */
-  private[graft] def leafParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
+    * listing-and-filter rule behind [[listing]], so a future listing fix
+    * (skipping `_temporary` dirs, following symlinks) lands in one place
+    * for every footer probe. */
+  private def leafParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
     def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)

@@ -53,9 +53,7 @@ object RefOps {
     import org.apache.hadoop.fs.Path
     val hconf = spark.sessionState.newHadoopConf()
     val files: Seq[(String, String)] = Tables.all.flatMap { t =>
-      val root = new Path(s"$dir/$t.parquet")
-      Tables.leafParquetFiles(root.getFileSystem(hconf), root)
-        .map(f => (t, f.getPath.toString))
+      Tables.listing(spark, dir, t).files.map(f => (t, f.getPath.toString))
     }
     val bc = spark.sparkContext.broadcast(
       new graft.sources.cdr.SerializableHadoopConf(hconf))

@@ -1730,8 +1730,10 @@ object Similarity {
         round(min(col("best_cos")), 4).as("min_cos"))
     // left from the center list: a center emptied by an exact-duplicate
     // twin (ties assign to the FIRST max) must stay visible as 0, not
-    // silently shrink the report below k rows
-    broadcast(meta).join(assigned, Seq("center_rank"), "left")
+    // silently shrink the report below k rows. A left outer join can
+    // only build on its right side, so the hint goes on the ≤ k-row
+    // assignment aggregate, not on the preserved center list.
+    meta.join(broadcast(assigned), Seq("center_rank"), "left")
       .select(col("center_rank").cast("long").as("center_rank"),
         col("center_id"), coalesce(col("n_assigned"), lit(0L)).as("n_assigned"),
         col("min_cos"))

@@ -766,6 +766,34 @@ class PlanAuditSpec extends GraftSuite {
       s"near-dup candidates must come from the (band, key) equi-join:\n$s")
   }
 
+  test("s08: the broadcast hint lands on the side a left outer join can build") {
+    // With size-based broadcasting off, only an honoured hint can put a
+    // BroadcastHashJoin in the plan. A left outer join builds on its
+    // right side, so a hint on the preserved left side is dropped.
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val expected = Similarity.s08KcenterCoreset(spark, sf).collect().toSeq
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val df = Similarity.s08KcenterCoreset(spark, sf)
+      val plan = executed(df)
+      // the helper's collect descends into AQE's query stages
+      val joins = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case j: BroadcastHashJoinExec => j
+      }
+      assert(joins.exists(j => j.joinType == LeftOuter && j.buildSide == BuildRight),
+        s"s08's hinted left outer join must broadcast its right side:\n$plan")
+      assert(df.collect().toSeq == expected, "the hint changed s08's rows")
+    } finally saved match {
+      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("s09: PQ scoring joins nothing but the broadcast ADC tables") {
     val s = planStr(Similarity.s09PqAnn(spark, sf))
     assert(!s.contains("CartesianProduct"),
