@@ -4,58 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE: shuffle partition count, default = cores (the
-    // driver contract). DEPLOY.md's sizing rule says grow this with the
-    // data; the env knob lets a scale experiment test exactly that claim
-    // on a fixed corpus without editing the tool.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Scan-side task sizing knob (r15). Measured A/B at sf1 (q21/q33/
-    // q35/q45 scoped, idle box): 8m read 12.2 s vs 9.1 s at the 128m
-    // default — the heavy queries are shuffle-agg bound, not scan
-    // bound, and 3 MB scan tasks just add task overhead. Default stays
-    // Spark's 128m; the env knob exists so scale experiments can test
-    // scan-width claims without editing the tool.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION", "128m")
-    // Broadcast threshold knob (r15). Measured A/B at sf10: raising it
-    // to 64m looked like parity with DuckDB's always-build-small-side
-    // hash joins, but BroadcastExchange collects AND builds the hash
-    // relation single-threaded on the driver — a 2M-row build costs
-    // seconds and is re-paid every pass, so the heavy set read 2-7×
-    // WORSE (q26 6.9 s → 16.5 s, q43 1.2 s → 8.8 s). A 32-thread
-    // shuffle join beats a serial broadcast build at these sizes;
-    // default stays Spark's 10 MB, knob kept for experiments.
-    val bcast = sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760")
-    // Join strategy (r15): above the broadcast threshold the engine
-    // prefers SHUFFLED HASH over sort-merge. Once both sides are
-    // exchanged on the key anyway, SMJ additionally SORTS the fact side
-    // — stage-profiled at sf10, q05's post-shuffle stage burned 100
-    // executor-CPU-s of which ~35 s was sorting 60M rows that the hash
-    // build never needs (8.1 s → 5.5 s wall). This matches the
-    // baseline engine's plan (DuckDB hash-joins everything) and the
-    // 100 TB story: build side = the per-partition slice of the SMALLER
-    // input (bounded by shuffle sizing, AQE splits skew), and Spark's
-    // SHJ spills since 3.x, so the plan degrades to disk instead of
-    // OOM on a hot key. SPARK_GRAFT_PREFER_SMJ=1 restores the Spark
-    // default for A/B runs.
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "0") == "1"
-    // SPARK_GRAFT_CONF (r15): generic "k=v;k=v" conf overlay for scoped
-    // A/B experiments — applied LAST so an experiment can override any
-    // default; never set by the driver, so artifacts of record are
-    // unaffected.
-    val spark = ToolConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.autoBroadcastJoinThreshold", bcast)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify.scala: Generate-inferred filters re-run tokenization
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Machine-state capture (r6 verdict: a run-wide ~1.45x inflation was
     // unattributable because the bench recorded nothing about the box).

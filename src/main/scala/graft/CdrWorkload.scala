@@ -95,13 +95,7 @@ object CdrWorkload {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "target/cdr10m"
     val work = if (args.length > 1) args(1) else dir + "-work"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val json = run(spark, dir, work)

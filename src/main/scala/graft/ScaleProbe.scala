@@ -22,6 +22,8 @@ import org.apache.spark.sql.functions._
   * measures the pathology of the synthetic input, not the operator.
   *
   * Usage: sbt "runMain graft.ScaleProbe [baseSfDir] [workDir] [scales]"
+  * (32 cores and shuffle partitions; override the partition count with
+  * `SPARK_GRAFT_CONF=spark.sql.shuffle.partitions=N`).
   * Emits one JSON line per scale: {"scale":N,"docs":M,"queries":{...}}.
   *
   * `--skew` mode instead measures the STOP-SHINGLE cap: every replica
@@ -53,9 +55,8 @@ object ScaleProbe {
     // would start colliding, silently voiding the disjointness argument
     require(scales.forall(s => s >= 1 && s <= 26),
       s"scales must be in [1, 26] (letter-prefix disjointness): $scales")
-    // optional: shuffle partition count — the knob DEPLOY.md says to grow
-    // with the data; pass a larger value to verify that claim at 8×
-    val shufflePartitions = if (args.length > 3) args(3) else "32"
+    require(args.length <= 3,
+      s"usage: ScaleProbe [baseSfDir] [workDir] [scales]: ${args.mkString(" ")}")
     val queries = Seq("d01_exact_dedup", "d02_ngram_jaccard", "d03_minhash_lsh",
       "d07_dup_clusters", "t13_unigram_surprisal", "t19_bigram_surprisal",
       "t20_line_dedup", "t05_top_tokens", "s01_knn_brute", "s02_ann_lsh",
@@ -106,16 +107,7 @@ object ScaleProbe {
       require(unknown.isEmpty, s"--queries names unprobed cells: $unknown")
     }
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
     if (skew) {

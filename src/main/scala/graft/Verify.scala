@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,31 +8,7 @@ object Verify {
     // Optional 3rd arg: comma-separated query-name filter (local iteration).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scan-task sizing parity with Bench (see Bench.scala's A/B note)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION", "128m"))
-      // broadcast sizing parity with Bench (see Bench.scala): the gate
-      // must execute the same plans the bench times
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760"))
-      // shuffled-hash-over-SMJ parity with Bench (rationale there)
-      .config("spark.sql.join.preferSortMergeJoin",
-        (sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "0") == "1").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate re-inlines the full generator expression
-      // into a pre-Generate filter; for the interpreted higher-order-fn
-      // shingle/minhash arrays that re-runs tokenization per row (~5x
-      // slower at sf0.1). The rule only prunes empty arrays — safe to drop.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
