@@ -43,12 +43,12 @@ object SparkEntry {
     "q28_cube" -> (Relational.q28Cube _),
     "q29_pivot" -> (Relational.q29Pivot _),
     "q30_set_ops" -> (Relational.q30SetOps _),
-    "q31_important_parts" -> (Relational.q31ImportantParts _),
+    "q31_important_parts" -> ((s, d) => Relational.q31ImportantParts(s, d)),
     "q32_range_window" -> (Relational.q32RangeWindow _),
     "q33_dominant_supplier" -> (Relational.q33DominantSupplier _),
     "q34_small_quantity_revenue" -> (Relational.q34SmallQuantityRevenue _),
     "q35_volume_shipping" -> (Relational.q35VolumeShipping _),
-    "q36_spend_deciles" -> (Relational.q36SpendDeciles _),
+    "q36_spend_deciles" -> ((s, d) => Relational.q36SpendDeciles(s, d)),
     "q37_table_profile" -> (Relational.q37TableProfile _),
     "q37b_profile_approx" -> ((s, d) => Relational.q37bProfileApprox(s, d)), // rows-only: HLL estimates are engine-specific
     "q38_incremental_rollup" -> (Relational.q38IncrementalRollup _),
@@ -59,7 +59,7 @@ object SparkEntry {
     "q43_priority_shipping" -> (Relational.q43PriorityShipping _),
     "q44_promo_share" -> (Relational.q44PromoShare _),
     "q45_supplier_count_by_class" -> (Relational.q45SupplierCountByClass _),
-    "q46_top_supplier" -> (Relational.q46TopSupplier _),
+    "q46_top_supplier" -> ((s, d) => Relational.q46TopSupplier(s, d)),
     "r01_record_count" -> (RefOps.r01RecordCount _),
     "r02_distributed_grep" -> (RefOps.r02DistributedGrep _),
     "r03_grep_count" -> (RefOps.r03GrepCount _),
@@ -115,7 +115,7 @@ object SparkEntry {
     "d04_simhash" -> (Dedup.d04Simhash _),
     "d05_embedding_dup" -> (Dedup.d05EmbeddingDup _),
     "d06_simhash_pairs" -> (Dedup.d06SimhashPairs _),
-    "d07_dup_clusters" -> (Dedup.d07DupClusters _),
+    "d07_dup_clusters" -> ((s, d) => Dedup.d07DupClusters(s, d)),
     "d08_neardup_by_source" -> (Dedup.d08NeardupBySource _),
     "d09_containment" -> (Dedup.d09Containment _),
     "d10_cross_split_leakage" -> ((s, d) => Dedup.d10CrossSplitLeakage(s, d)),

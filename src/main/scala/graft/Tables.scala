@@ -64,16 +64,29 @@ object Tables {
 
   /** Fingerprint of the files a parquet read's file index listed, or
     * None when the read is not a file-index relation. */
-  private def readerState(df: DataFrame): Option[String] = {
+  private def readerState(df: DataFrame): Option[String] =
+    fileIndexes(df).headOption.map(index => fingerprint(index.allFiles()))
+
+  /** Total at-rest bytes of the one table `table` reads, summed from the
+    * listing its file index already holds: no second listing, no footer
+    * read, no job. Every size gate reads its table through here, from
+    * the same DataFrame its query scans. Throws unless `table` reads
+    * exactly one file relation, so a gate cannot silently sum a join. */
+  def atRestBytes(table: DataFrame): Long = fileIndexes(table) match {
+    case Seq(index) => index.allFiles().map(_.getLen).sum
+    case found => throw new IllegalArgumentException(
+      s"atRestBytes needs a DataFrame that reads exactly one file relation; " +
+        s"this one reads ${found.size}")
+  }
+
+  /** The file indexes of every file relation in `df`'s analyzed plan. */
+  private def fileIndexes(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex] = {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-    df.queryExecution.analyzed.collectFirst {
-      case r: LogicalRelation => r.relation
-    }.collect {
-      case h: HadoopFsRelation => h.location
-    }.collect {
-      case index: PartitioningAwareFileIndex => fingerprint(index.allFiles())
-    }
+    df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+      .collect { case index: PartitioningAwareFileIndex => index }
   }
 
   /** One table state: path, length and modification time of every leaf
@@ -107,7 +120,7 @@ object Tables {
 
   /** A table's leaf `.parquet` files from one driver listing, with the
     * Hadoop conf it was listed under — the input of every footer probe
-    * below and of [[parquetBytes]]. */
+    * below. */
   private[graft] final case class Listing(root: org.apache.hadoop.fs.Path,
       conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.FileStatus])
@@ -159,12 +172,6 @@ object Tables {
   }
 
   private val rowCountMemo = new StateMemo[String, Long]
-
-  /** Total at-rest bytes of a table's parquet data files — one driver
-    * listing (no footer reads, no data pages): the sizing signal for
-    * persist-vs-restream policies (d19's occurrence index). */
-  def parquetBytes(spark: SparkSession, dir: String, name: String): Long =
-    listing(spark, dir, name).files.map(_.getLen).sum
 
   /** Footer-statistics (min, max) of an integer column across a table's
     * parquet files — driver-side, no data pages (the same footer the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.functions.{TextFunctions => TF, TextSql => TS, VectorFunctions => VF, VectorSql => VS}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -645,38 +645,19 @@ object Dedup {
     * (distributed), the driver only checks the converged count, and
     * convergence is O(log diameter) — blob-shaped dup clusters close
     * in 2-3 rounds, and even a path-shaped chained-boilerplate graph
-    * closes logarithmically; per-round checkpoints truncate the
+    * closes logarithmically; per-round snapshots by `pin` truncate the
     * growing lineage. Output: one row per cluster with its canonical
     * (min) doc and size.
     *
-    * Checkpoint durability is a parameter: the default
-    * `localCheckpoint` stores round blocks on executors only — fast,
-    * but an executor loss mid-iteration kills the query. Connected
-    * components is the longest multi-stage job in this suite, exactly
-    * where lineage durability is worth paying for, so pass
-    * `checkpointDir = Some(reliableDir)` on a real cluster to write
-    * round snapshots through the reliable store instead (an executor
-    * loss then recomputes nothing — rounds restart from the snapshot).
-    *
-    * Reliable-mode housekeeping: round snapshots are UNMANAGED parquet
-    * writes under per-round subdirs of `checkpointDir` (written eagerly,
-    * read back lazily) — not RDD checkpoints, because
-    * `setCheckpointDir` is session-global and cannot be unset, so the
-    * checkpoint route would leak the caller's (possibly temporary) dir
-    * to every later `checkpoint()` in the session (r7 ADVICE; q36's
-    * snapshot uses the same rule). A round's subdir is deleted as soon
-    * as the NEXT round has materialized. Only the final round's and the
-    * pair/edge snapshots survive: they back the returned lazy
-    * DataFrame, so delete `checkpointDir` itself once the result is
-    * consumed. */
-  def d07DupClusters(spark: SparkSession, dir: String): DataFrame =
-    d07DupClusters(spark, dir, checkpointDir = None)
-
+    * This is the suite's longest multi-stage job, so on a cluster pass
+    * [[Pin.Reliable]]: an executor loss then restarts from the last
+    * round's snapshot. A round's snapshot is dropped once the next round
+    * has materialized; the pair snapshot and the final round back the
+    * returned DataFrame, so delete the dir once it is consumed. */
   def d07DupClusters(spark: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame = {
+      pin: Pin.Snapshot = Pin.Local): DataFrame = {
     val (labels, _) = connectedComponents(spark,
-      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")),
-      checkpointDir)
+      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")), pin)
     labels.groupBy(col("cluster").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
       .orderBy("cluster_id")
@@ -701,28 +682,14 @@ object Dedup {
     * unchanged — labels only ever decrease and stabilize exactly when
     * constant per component — so the d07 oracle is untouched. */
   private[graft] def connectedComponents(spark: SparkSession, pairs0: DataFrame,
-      checkpointDir: Option[String]): (DataFrame, Int) = {
-    val sc = spark.sparkContext
-    def rmDir(sub: String): Unit = checkpointDir.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d + "/" + sub)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    // Reliable mode = unmanaged parquet snapshot (eager write, lazy
-    // read-back): identical durability to Dataset.checkpoint with no
-    // session-global setCheckpointDir mutation (see docstring).
-    def ckpt(df: DataFrame, sub: String): DataFrame = checkpointDir match {
-      case None => df.localCheckpoint()
-      case Some(d) =>
-        df.write.mode("overwrite").parquet(d + "/" + sub)
-        spark.read.parquet(d + "/" + sub)
-    }
+      pin: Pin.Snapshot = Pin.Local): (DataFrame, Int) = {
     // Materialize the (expensive) pair generation ONCE before the union —
     // the two union branches are otherwise separate subtrees and would
     // re-run the whole inverted-index join twice.
-    val pairs = ckpt(pairs0, "static")
+    val pairs = pin(pairs0, "static")
     val edges = pairs.union(pairs.select(col("doc_j"), col("doc_i")))
       .toDF("src", "dst")
-    var labels = ckpt(edges.select(col("src").as("doc_id")).distinct()
+    var labels = pin(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id")), "round-0")
     var converged = false
     var round = 0
@@ -743,14 +710,14 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // pointer jump: adopt the (never larger) label of my label
       val ptr = hop.select(col("doc_id").as("p_id"), col("cluster").as("p_cluster"))
-      val next = ckpt(hop.join(ptr, col("cluster") === col("p_id"), "left")
+      val next = pin(hop.join(ptr, col("cluster") === col("p_id"), "left")
         .select(col("doc_id"), col("prev"),
           least(col("cluster"), coalesce(col("p_cluster"), col("cluster"))).as("cluster")),
         s"round-$round")
       converged = next.filter(col("prev") =!= col("cluster")).isEmpty
-      hop.unpersist(blocking = false) // `next` is materialized by ckpt
+      hop.unpersist(blocking = false) // `next` is materialized by pin
       labels = next.select(col("doc_id"), col("cluster"))
-      rmDir(s"round-${round - 1}") // superseded — `next` is materialized
+      pin.drop(spark, s"round-${round - 1}") // superseded by `next`
     }
     (labels, round)
   }
@@ -1082,7 +1049,7 @@ object Dedup {
     * sub-TB scale the re-scan DOMINATES wall time (measured 3.3× the
     * oracle at sf0.1 without the persist, within-bar with it), so the
     * corpus-dir entry auto-persists when the at-rest documents table is
-    * under [[D19PersistOccMaxBytes]]. Persist hygiene: Dataset.persist
+    * under [[graft.Pin.MaxInputBytes]]. Persist hygiene: Dataset.persist
     * registers in the session CacheManager, which holds the entry
     * STRONGLY until an explicit unpersist (the ContextCleaner never
     * collects CacheManager entries) — so a ONE-SLOT registry
@@ -1098,25 +1065,14 @@ object Dedup {
   def d19DupSpans(spark: SparkSession, dir: String): DataFrame =
     d19DupSpans(spark, dir, ExactSpanChars)
 
-  def d19DupSpans(spark: SparkSession, dir: String, spanLen: Int): DataFrame =
-    d19DupSpansOf(Tables.documents(spark, dir), spanLen,
-      persistOcc =
-        Tables.parquetBytes(spark, dir, "documents") <= D19PersistOccMaxBytes,
+  def d19DupSpans(spark: SparkSession, dir: String, spanLen: Int): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    d19DupSpansOf(docs, spanLen,
+      persistOcc = Tables.atRestBytes(docs) <= Pin.MaxInputBytes,
       packedCanon =
         Tables.parquetLongColumnRange(spark, dir, "documents", "doc_id")
           .exists { case (lo, hi) => lo >= 0 && hi < (1L << 31) })
-
-  /** Auto-persist bound for d19's occurrence index, in at-rest DOCUMENT
-    * bytes (the cheap driver-side signal). Size the bound from the
-    * EXPLODED footprint, not the compressed input: parquet text
-    * decompresses ~3×, and the index carries ~one 24-byte row per
-    * character, so at-rest bytes inflate ~70× by the time they sit in
-    * MEMORY_AND_DISK. 512 MiB of parquet ⇒ ~35 GiB cached — a real but
-    * reasonable slice of one cluster's storage memory/local disk; the
-    * r10 8 GiB default implied a ~560 GiB pin and could exhaust
-    * executor local disk. Past the bound the two-pass restream is the
-    * documented scale default. */
-  val D19PersistOccMaxBytes: Long = 512L << 20
+  }
 
   /** The one persisted occ index the session holds (persist hygiene —
     * see the d19DupSpans doc). */
@@ -1345,7 +1301,7 @@ object Dedup {
     * (score DESC, doc_id ASC) order). */
   def d21QualityCanonical(spark: SparkSession, dir: String): DataFrame = {
     val (labels, _) = connectedComponents(spark,
-      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")), None)
+      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")))
     val q = Tables.documents(spark, dir)
       .withColumn("toks", TF.tokens(col("text")))
       .filter(size(col("toks")) >= 3)
@@ -1385,7 +1341,7 @@ object Dedup {
     * scores. */
   def d21bTrainedCanonical(spark: SparkSession, dir: String): DataFrame = {
     val (labels, _) = connectedComponents(spark,
-      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")), None)
+      ngramJaccardPairs(spark, dir).select(col("doc_i"), col("doc_j")))
     val (weights, interceptQ) =
       TextAnalysis.t28ExportWeights(spark, dir)
     val scored = TextAnalysis.quantizedDocScores(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.functions.{TextFunctions => TF, TextSql => TS}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -94,8 +94,8 @@ object Pipelines {
     * Shape at 100 TB: [[cleanCorpus]] is one scan pass + two bounded
     * shuffles; the pair stage is the d03 equi-join (never all pairs);
     * components is O(log diameter) whole-graph rounds with per-round
-    * checkpoints (pass a reliable `checkpointDir` via d07's knob on a
-    * real cluster); the final report shuffles |kept| rows once.
+    * snapshots (d07's `pin`; [[graft.Pin.Reliable]] on a real cluster);
+    * the final report shuffles |kept| rows once.
     *
     * DELIBERATE two-pass lineage: `cleaned` is referenced twice (once
     * into the pair/components branch, once for the report join), so the
@@ -110,7 +110,7 @@ object Pipelines {
     val cleaned = cleanCorpus(spark, dir)
     val pairs = Dedup.minhashVerifiedPairs(cleaned.select(col("doc_id"), col("text")))
       .select(col("doc_i"), col("doc_j"))
-    val (labels, _) = Dedup.connectedComponents(spark, pairs, None)
+    val (labels, _) = Dedup.connectedComponents(spark, pairs)
     val drops = labels.filter(col("cluster") =!= col("doc_id"))
       .select(col("doc_id"), lit(1L).as("is_dup"))
     cleaned.join(drops, Seq("doc_id"), "left")
@@ -494,35 +494,18 @@ object Pipelines {
       surged: DataFrame, repaired: DataFrame)
 
   def p20Stages(spark: SparkSession, dir: String): P20Stages = {
-    // r16 (r15 verdict item 7): the stage DataFrames are NESTED lineages
-    // — `kept` contains `cleaned` twice (pair generation + anti-join),
-    // `surged` contains `kept` twice, and the audit unions five
-    // per-stage aggregates on top — so without materialization the
-    // early stages re-execute multiplicatively across the chain (only
-    // exchanges are reused, and map-side subtrees re-run per consumer):
-    // the composition-level form of the r15 dfCapped disease. Under the
-    // d19-style size bound the in-memory form pins each intermediate
-    // corpus once (localCheckpoint — the q31/q36 idiom; measured at
-    // sf0.1: 5.95 → 4.34 s scoped). Past the bound pinning 3 corpus
-    // copies is the wrong trade and the staged workDir form
-    // (p20StagesCheckpointed — parquet artifacts, crash-safe resume) is
-    // the documented production path; the lineage shape then matches
-    // r15's.
-    val pin = Tables.parquetBytes(spark, dir, "documents") <= P20PinMaxBytes
-    def p(df: DataFrame): DataFrame = if (pin) df.localCheckpoint() else df
-    val cleaned = p(cleanCorpus(spark, dir))
-    val kept = p(p20Keep(spark, cleaned))
-    val surged = p(p20Surge(kept))
+    // Each stage nests the one before it more than once, so unpinned
+    // stages re-execute per consumer down the chain. The pin is sized by
+    // the documents table `cleaned0` reads; past the bound the staged
+    // workDir form (p20StagesCheckpointed) is the production path.
+    val cleaned0 = cleanCorpus(spark, dir)
+    val pin = Pin.localIfUnder(Tables.atRestBytes(cleaned0))
+    val cleaned = pin(cleaned0, "cleaned")
+    val kept = pin(p20Keep(spark, cleaned), "kept")
+    val surged = pin(p20Surge(kept), "surged")
     val repaired = p20Repair(surged)
     P20Stages(cleaned, kept, surged, repaired)
   }
-
-  /** In-memory p20 stage-pin bound, in at-rest DOCUMENT bytes (d19's
-    * cheap driver-side signal and the same 512 MiB value: the pin holds
-    * ~3 decompressed corpus copies in executor storage — fine where the
-    * d19 occ pin is fine, wrong at 100 TB where the staged workDir form
-    * exists precisely to hold intermediates as parquet artifacts). */
-  private[graft] val P20PinMaxBytes: Long = 512L << 20
 
   /** Stage 2: near-dup canonical keep over any cleaned corpus — d03's
     * verified pairs + d07's components + the d01 keep rule. */
@@ -530,7 +513,7 @@ object Pipelines {
     val pairs = Dedup.minhashVerifiedPairs(
         cleaned.select(col("doc_id"), col("text")))
       .select(col("doc_i"), col("doc_j"))
-    val (labels, _) = Dedup.connectedComponents(spark, pairs, None)
+    val (labels, _) = Dedup.connectedComponents(spark, pairs)
     cleaned.join(
       labels.filter(col("cluster") =!= col("doc_id")).select(col("doc_id")),
       Seq("doc_id"), "left_anti")

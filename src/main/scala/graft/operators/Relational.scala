@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,41 +66,28 @@ object Relational {
   private[graft] def csum(e: Column): Column =
     sum(round(e * lit(100), 0).cast("long")) / lit(100.0)
 
-  /** SIZE-GATED broadcast hint (r16, r15 verdict item 4). The five
-    * dim-sliver hints (q05/q24/q26/q35/q41) carried their come-off
-    * bounds in comments (part slivers hold to ~SF1000, supplier-scale
-    * dims beyond) — but a comment cannot take a hint off, and past the
-    * bound a stale `broadcast()` is a driver OOM at the 100 TB design
-    * point. The gate reads the hinted side's SOURCE table's at-rest
-    * parquet bytes (the d19 `persistOcc` pattern — one driver-side
-    * listing, no data read, no job) and elides the hint past the bound,
-    * so the query degrades to a shuffle join automatically instead of
-    * relying on a human re-reading the comment. At every gated SF the
-    * hint applies unchanged (sf10 at rest: part 16.3 MB, supplier
-    * 1.6 MB — orders of magnitude under the bounds); both regimes are
-    * spec-pinned (PlanAuditSpec). */
-  private[graft] def broadcastIfUnder(maxBytes: Long, srcBytes: => Long)(
+  /** `df` with a broadcast hint while `table`, the source table of the
+    * hinted sliver, is at most `maxBytes` at rest
+    * ([[graft.Tables.atRestBytes]]); past the bound the hint comes off
+    * and the join degrades to a shuffle join, because a stale
+    * `broadcast()` at the 100 TB design point is a driver OOM. Both
+    * regimes are spec-pinned (PlanAuditSpec). */
+  private[graft] def broadcastIfUnder(maxBytes: Long, table: DataFrame)(
       df: DataFrame): DataFrame =
-    if (srcBytes <= maxBytes) broadcast(df) else df
+    if (Tables.atRestBytes(table) <= maxBytes) broadcast(df) else df
 
   /** Come-off bound for PART-derived sliver hints (q26/q41/q24): the
-    * hinted slivers keep ~1/20–1/25 of part projected to two narrow
-    * columns, so the executor-held hash relation is ~1/300 of part's
-    * decompressed bytes. At-rest part crosses 1.5 GiB at ~SF900 — the
-    * ~SF1000 come-off point the q41 comment documented; past it the
-    * partkey exchange returns (measured acceptable: the r15 before-plans
-    * ARE that shape). */
+    * slivers keep ~1/20–1/25 of part in two narrow columns, ~1/300 of
+    * part's decompressed bytes, and at-rest part crosses 1.5 GiB at
+    * ~SF900. Past it the partkey exchange returns. */
   private[graft] val PartHintMaxBytes: Long = 1536L << 20
 
   /** Come-off bound for SUPPLIER-scale dim hints (q05/q24/q35/q41):
-    * supplier is ~10⁴ rows/SF (~60 MB serialized at the 100 TB design
-    * point per the q05 bound note). At-rest supplier crosses 256 MiB
-    * only past ~SF1600 — beyond the design envelope, but the gate makes
-    * the envelope executable. */
+    * supplier is ~10⁴ rows/SF, and at rest it crosses 256 MiB only past
+    * ~SF1600, beyond the design envelope. */
   private[graft] val SupplierHintMaxBytes: Long = 256L << 20
 
-  /** Bloom-filter SEMI-PREFILTER (guide §3.2; r16, r15 verdict item 2):
-    * shed rows of `big` whose long `bigKey` has no match in `keys`'s
+  /** Bloom-filter SEMI-PREFILTER: shed rows of `big` whose long `bigKey` has no match in `keys`'s
     * `keyCol` BEFORE big's exchange. The date-windowed orders slices of
     * q03/q04/q42 are 4–26× more selective than the lineitem side they
     * meet, but they are SF-linear (never broadcastable) and the no-stats
@@ -121,13 +108,8 @@ object Relational {
     * shuffle bytes; there are NO false negatives, so the downstream join
     * result is bit-identical. The keys side is computed twice (filter
     * build + the join itself) — the guide's documented cost, cheap
-    * because the slice projects to one column.
-    *
-    * Scale-gated like d19's persistOcc: below [[BloomShedMinFactBytes]]
-    * of at-rest fact the two extra driver jobs cost more than the
-    * shuffle they save (sf0.1's whole lineitem exchange is ~10 MB), so
-    * the driver-contract sf0.1 plans are unchanged; sf1+ takes the shed
-    * path. Both regimes spec-pinned. */
+    * because the slice projects to one column. Queries call it through
+    * the size gate [[bloomShedBig]]. */
   private[graft] def bloomShed(keys: DataFrame, keyCol: String,
       big: DataFrame, bigKey: Column, fpp: Double = 0.03): DataFrame = {
     val n = keys.count()
@@ -142,13 +124,13 @@ object Relational {
         org.apache.spark.sql.graftshim.Shims.expression(bigKey))))
   }
 
-  /** [[bloomShed]] applied only past the fact-size gate; under it the
-    * fact passes through untouched (identity — the caller's join drops
-    * the same rows either way). */
-  private def bloomShedBig(spark: SparkSession, dir: String,
-      keys: DataFrame, keyCol: String, big: DataFrame,
+  /** [[bloomShed]] applied only once the fact table `big` reads is at
+    * least [[BloomShedMinFactBytes]] at rest; under it `big` passes
+    * through untouched (the caller's join drops the same rows either
+    * way). */
+  private def bloomShedBig(keys: DataFrame, keyCol: String, big: DataFrame,
       bigKey: Column): DataFrame =
-    if (Tables.parquetBytes(spark, dir, "lineitem") < BloomShedMinFactBytes) big
+    if (Tables.atRestBytes(big) < BloomShedMinFactBytes) big
     else bloomShed(keys, keyCol, big, bigKey)
 
   /** Gate for [[bloomShedBig]], in at-rest fact (lineitem) bytes:
@@ -226,8 +208,7 @@ object Relational {
       .filter(col("l_shipdate") > ts("1998-01-01 00:00:00"))
       .select(col("l_orderkey"),
         centsOf32(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("cents"))
-    bloomShedBig(spark, dir, oc.select(col("o_orderkey")), "o_orderkey",
-        l, col("l_orderkey"))
+    bloomShedBig(oc.select(col("o_orderkey")), "o_orderkey", l, col("l_orderkey"))
       .join(oc, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg((sum(col("cents")) / lit(100.0)).as("revenue"))
@@ -247,8 +228,8 @@ object Relational {
         col("o_orderdate") < ts("1997-01-01 00:00:00"))
     val l = Tables.lineitem(spark, dir).filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"))
-    val lShed = bloomShedBig(spark, dir, o.select(col("o_orderkey")),
-      "o_orderkey", l, col("l_orderkey"))
+    val lShed = bloomShedBig(o.select(col("o_orderkey")), "o_orderkey", l,
+      col("l_orderkey"))
     o.join(lShed, col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"))
@@ -276,7 +257,8 @@ object Relational {
       .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === "ASIA")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
-    val s = Tables.supplier(spark, dir)
+    val supplier = Tables.supplier(spark, dir)
+    val s = supplier
       .join(broadcast(nAsia), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
     val c = Tables.customer(spark, dir)
@@ -290,8 +272,7 @@ object Relational {
     Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"),
         col("l_discount"))
-      .join(broadcastIfUnder(SupplierHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "supplier"))(s),
+      .join(broadcastIfUnder(SupplierHintMaxBytes, supplier)(s),
         col("l_suppkey") === col("s_suppkey"))
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey") &&
@@ -587,13 +568,14 @@ object Relational {
     * (customer-scale — never hinted). The share is a conditional-sum
     * ratio inside one aggregate pass. */
   def q24MarketShare(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).filter(col("p_type") === "ECONOMY")
-      .select(col("p_partkey"))
+    val part = Tables.part(spark, dir)
+    val p = part.filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
     val r = Tables.region(spark, dir).filter(col("r_name") === "ASIA")
     val n1 = Tables.nation(spark, dir)
     val n2 = Tables.nation(spark, dir)
       .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-    val supp = Tables.supplier(spark, dir)
+    val supplier = Tables.supplier(spark, dir)
+    val supp = supplier
       .join(broadcast(n2), col("s_nationkey") === col("sn_key"))
       .select(col("s_suppkey"), col("supp_nation"))
     val custAsia = Tables.customer(spark, dir)
@@ -602,11 +584,9 @@ object Relational {
       .select(col("c_custkey"))
     val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
     Tables.lineitem(spark, dir)
-      .join(broadcastIfUnder(PartHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "part"))(p),
+      .join(broadcastIfUnder(PartHintMaxBytes, part)(p),
         col("l_partkey") === col("p_partkey"))
-      .join(broadcastIfUnder(SupplierHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "supplier"))(supp),
+      .join(broadcastIfUnder(SupplierHintMaxBytes, supplier)(supp),
         col("l_suppkey") === col("s_suppkey"))
       .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
       .join(custAsia, col("o_custkey") === col("c_custkey"))
@@ -679,27 +659,17 @@ object Relational {
     * now records load/heap to attribute this). The executed plan is
     * pinned hash-join-only by PlanAuditSpec. */
   def q26CheapestSupplier(spark: SparkSession, dir: String): DataFrame = {
-    // r15b: the part predicate selects PARTKEYS, and the window
-    // partitions BY partkey — so pruning whole partitions before the
-    // window leaves every surviving partition's min unchanged
-    // (partition-level filters commute with partition-wide windows;
-    // q34's brand join is the same move). The pruned sliver projected
-    // to (key, brand) broadcasts under [[PartHintMaxBytes]] (r16: the
-    // q41 gearParts ~SF1000 bound, now enforced by the size gate rather
-    // than this comment), so the fact sheds ~24/25 of its rows MAP-SIDE
-    // before its one l_partkey exchange — sf10: 4.05 → 2.38 s in the
-    // scoped bench, 2.32 s isolated with the fact exchange at 75.7 MB
-    // (the window previously exchanged and sorted all 60M rows to keep
-    // 2.4M). Past the bound the hint comes off and the partkey exchange
-    // returns. Hash-proven against the unchanged oracle SQL at every
-    // gated SF.
-    val p = Tables.part(spark, dir)
+    // The part predicate selects whole window partitions (the window is
+    // partitioned by partkey), so pruning before the window leaves every
+    // surviving min unchanged, and the hinted sliver sheds ~24/25 of the
+    // fact map-side before its one l_partkey exchange.
+    val part = Tables.part(spark, dir)
+    val p = part
       .filter(col("p_type") === "ECONOMY" && col("p_size") <= 15)
       .select(col("p_partkey"), col("p_brand"))
     Tables.lineitem(spark, dir)
       .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
-      .join(broadcastIfUnder(PartHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "part"))(p),
+      .join(broadcastIfUnder(PartHintMaxBytes, part)(p),
         col("l_partkey") === col("p_partkey"))
       .withColumn("min_price",
         min(col("l_extendedprice")).over(Window.partitionBy(col("l_partkey"))))
@@ -919,7 +889,8 @@ object Relational {
     // one o_orderkey exchange; the planner's no-stats estimate kept the
     // join-result slice un-broadcast and exchanged the full 60M-row
     // fact at sf10 (measured 849 MB shuffle read → gone, 4.1 s → 2.3 s)
-    val supp = Tables.supplier(spark, dir)
+    val supplier = Tables.supplier(spark, dir)
+    val supp = supplier
       .join(broadcast(nations), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
     val cust = Tables.customer(spark, dir)
@@ -949,8 +920,7 @@ object Relational {
     // Q7's minimum without bucketing — recorded as the named inherent
     // cost in DEPLOY.md.
     Tables.lineitem(spark, dir)
-      .join(broadcastIfUnder(SupplierHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "supplier"))(supp),
+      .join(broadcastIfUnder(SupplierHintMaxBytes, supplier)(supp),
         col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("supp_nation") =!= col("cust_nation"))
@@ -979,80 +949,25 @@ object Relational {
         idiv(rank - r * big - lit(1L), greatest(q, lit(1L))))
   }
 
-  /** q36: exact global DECILE report of per-customer lifetime spend —
-    * rank-based NTILE(10) computed WITHOUT a single-partition window
-    * over the data. A bare `ntile(10) over (order by …)` plans as one
-    * window partition holding every row — the global-sort analogue of
-    * q20's buffer-exact percentile, an executor OOM at 100 TB. Shipped
-    * plan is two-phase distributed ranking (the TeraSort offset idiom,
-    * p05's per-shard cumsum applied to global order statistics):
-    * (1) range-repartition the per-customer aggregate on the sort key
-    * (cents desc, custkey) — Spark's range exchange samples boundaries,
-    * so slices are balanced regardless of spend skew — and take
-    * row_number per slice (window partitioned by slice id: parallelism
-    * = #slices, no global barrier); (2) per-slice counts (≤ #partitions
-    * rows, KB-sized at any scale) get an exclusive prefix-sum offset in
-    * a bounded driver-adjacent window and broadcast-join back; global
-    * rank = offset + local rank, exact because range slices are
-    * order-disjoint. Decile then follows from the rank by integer
-    * arithmetic (ntileFromRank) — no float boundary anywhere: spend is
-    * summed in integer cents (q35 money rule), output is counts and
-    * cent totals. Window input is the GROUPED per-customer relation
-    * (q27 precedent: the fact collapses before any window). */
-  /** The ranked relation behind [[q36SpendDeciles]]. `snapshot = true`
-    * (the shipped path) materializes the slice assignment ONCE with a
-    * localCheckpoint: the offset branch and the rank branch are two
-    * consumers of the range shuffle, and without a shared
-    * materialization their agreement would ride on exchange reuse and
-    * on range-boundary sampling repeating — a silent wrong-ranks
-    * failure mode if either ever changes. With the snapshot, both
-    * branches read the SAME pid assignment by construction. On a real
-    * cluster pass `checkpointDir` (the d07 knob): localCheckpoint blocks
-    * live in executor storage and die with an executor — the production
-    * form writes the snapshot to the reliable FS so the ranking survives
-    * executor loss instead of recomputing from (possibly re-sampled)
-    * lineage or failing. The `snapshot = false` form exists for the plan
-    * audit, which pins the RangePartitioning exchange and that even the
-    * lineage-shared form deduplicates to ONE reused exchange. */
+  /** The ranked relation behind [[q36SpendDeciles]]. A snapshotting
+    * `pin` materializes the slice assignment once, so the offset branch
+    * and the rank branch read the same pid assignment by construction,
+    * not by exchange reuse and a repeated range-boundary sample.
+    * [[Pin.Off]] is the plan-audit form, which pins the RangePartitioning
+    * exchange and its one reused materialization. */
   private[graft] def spendRanks(spark: SparkSession, dir: String,
-      snapshot: Boolean, checkpointDir: Option[String] = None): DataFrame = {
+      pin: Pin): DataFrame = {
     val spend0 = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("cents"))
-    // r16: a RANGE exchange SAMPLES its child to pick partition
-    // boundaries, which re-executes the child subtree — the sf10 plan
-    // showed the 15M-row orders aggregate running TWICE (sampling pass
-    // + shuffle pass). Pin the |customers|-row aggregate in the
-    // local/bench form so the sampler reads the pin. The reliable
-    // (checkpointDir) form deliberately keeps lineage here: a
-    // localCheckpoint is executor-local and would silently break that
-    // form's durability contract, and a deterministic hash aggregate is
-    // safely recomputable — it pays the one extra aggregation pass for
-    // the durability it promises. Ranks are exact for ANY boundary
-    // sample (offsets are computed from the realized slices), so this
-    // is plan-only: results are bit-identical either way.
-    val spend = (snapshot, checkpointDir) match {
-      case (true, None) => spend0.localCheckpoint()
-      case _ => spend0
-    }
-    val parted0 = spend
+    // A range exchange re-runs its child to sample boundaries, so the
+    // |customers|-row aggregate is pinned, but only locally: the Reliable
+    // form recomputes this deterministic aggregate rather than keep an
+    // executor-local block its durability would depend on.
+    val spend = if (pin == Pin.Local) pin(spend0, "q36-spend") else spend0
+    val parted = pin(spend
       .repartitionByRange(col("cents").desc, col("o_custkey").asc)
-      .withColumn("pid", spark_partition_id().cast("long"))
-    // The reliable form is an UNMANAGED snapshot — write the slice
-    // assignment to the caller's dir and read it back — not an RDD
-    // checkpoint: SparkContext.setCheckpointDir cannot be unset, so the
-    // checkpoint route would leak a session-global dir (pointing at the
-    // caller's possibly-temporary path) to every later checkpoint() in
-    // the session. The parquet round-trip has identical durability (the
-    // pid column is materialized data either way) with no session-state
-    // mutation.
-    val parted = (snapshot, checkpointDir) match {
-      case (false, _) => parted0
-      case (true, None) => parted0.localCheckpoint()
-      case (true, Some(d)) =>
-        parted0.write.mode("overwrite").parquet(d + "/q36-ranks")
-        spark.read.parquet(d + "/q36-ranks")
-    }
+      .withColumn("pid", spark_partition_id().cast("long")), "q36-ranks")
     val wLocal = Window.partitionBy(col("pid"))
       .orderBy(col("cents").desc, col("o_custkey").asc)
     val local = parted.withColumn("lrn", row_number().over(wLocal).cast("long"))
@@ -1076,14 +991,29 @@ object Relational {
       .withColumn("rank", col("off") + col("lrn"))
   }
 
-  def q36SpendDeciles(spark: SparkSession, dir: String): DataFrame =
-    q36SpendDeciles(spark, dir, checkpointDir = None)
-
-  /** `checkpointDir`-accepting form: reliable-FS snapshot of the slice
-    * assignment (survives executor loss; delete the dir once consumed). */
+  /** q36: exact global DECILE report of per-customer lifetime spend —
+    * rank-based NTILE(10) computed WITHOUT a single-partition window
+    * over the data. A bare `ntile(10) over (order by …)` plans as one
+    * window partition holding every row — the global-sort analogue of
+    * q20's buffer-exact percentile, an executor OOM at 100 TB. Shipped
+    * plan is two-phase distributed ranking (the TeraSort offset idiom,
+    * p05's per-shard cumsum applied to global order statistics):
+    * (1) range-repartition the per-customer aggregate on the sort key
+    * (cents desc, custkey) — Spark's range exchange samples boundaries,
+    * so slices are balanced regardless of spend skew — and take
+    * row_number per slice (window partitioned by slice id: parallelism
+    * = #slices, no global barrier); (2) per-slice counts (≤ #partitions
+    * rows, KB-sized at any scale) get an exclusive prefix-sum offset in
+    * a bounded driver-adjacent window and broadcast-join back; global
+    * rank = offset + local rank, exact because range slices are
+    * order-disjoint. Decile then follows from the rank by integer
+    * arithmetic (ntileFromRank) — no float boundary anywhere: spend is
+    * summed in integer cents (q35 money rule), output is counts and
+    * cent totals. Window input is the GROUPED per-customer relation
+    * (q27 precedent: the fact collapses before any window). */
   def q36SpendDeciles(spark: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame =
-    spendRanks(spark, dir, snapshot = true, checkpointDir)
+      pin: Pin.Snapshot = Pin.Local): DataFrame =
+    spendRanks(spark, dir, pin)
       .withColumn("decile", ntileFromRank(col("rank"), col("n_total"), 10))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),
@@ -1227,26 +1157,15 @@ object Relational {
     * doubles (sums exact below 2^53), so the >300 gate and the BIGINT
     * cast sit on no float boundary. */
   def q40BigOrders(spark: SparkSession, dir: String): DataFrame = {
-    // r16 (r15 verdict item 2). Two findings from the sf10 AQE-final
-    // plan (plans/r16/q40_before.txt):
-    //  1. The map-side partial agg collapsed 60M rows to only 56.6M
-    //     (1.06× — orderkeys are scattered across scan tasks), so every
-    //     map task built a multi-M-entry hash map to ship a 1.29 GiB
-    //     exchange anyway. q31's repartition-before-aggregate move:
-    //     pre-partitioning satisfies the aggregate's distribution, the
-    //     planner drops the useless map-side pass, and the per-task
-    //     hash maps shrink to |orderkeys|/|tasks|.
-    //  2. The no-stats planner cannot see that `big` (sum>300) keeps
-    //     ~0.3% of orders, so orders paid a 572 MiB exchange into a
-    //     sort-merge join and customer a 69 MiB exchange downstream.
-    //     `big` and the orders⋈big sliver carry size-gated broadcast
-    //     hints: |big| is SF-linear but tiny (47.3k rows at sf10,
-    //     ~100 MB serialized at ~SF1000 where the gate takes the hints
-    //     off and this shape degrades back to the before-plan). With
-    //     the hints the whole query has ONE exchange (the fact).
-    val gate = Tables.parquetBytes(spark, dir, "lineitem") <= BigOrdersHintMaxFactBytes
+    // Orderkeys are scattered across scan tasks, so a map-side partial
+    // aggregate collapses almost nothing; repartitioning first drops it.
+    // The no-stats planner cannot see that `big` keeps ~0.3% of orders,
+    // so `big` and orders⋈big carry gated hints: with them the fact is
+    // the query's one exchange.
+    val lineitem = Tables.lineitem(spark, dir)
+    val gate = Tables.atRestBytes(lineitem) <= BigOrdersHintMaxFactBytes
     def hinted(df: DataFrame): DataFrame = if (gate) broadcast(df) else df
-    val big = hinted(Tables.lineitem(spark, dir)
+    val big = hinted(lineitem
       .select(col("l_orderkey"), col("l_quantity"))
       .repartition(col("l_orderkey"))
       .groupBy(col("l_orderkey"))
@@ -1264,11 +1183,9 @@ object Relational {
   }
 
   /** Come-off bound for q40's aggregate-sliver broadcast hints, in
-    * at-rest FACT bytes (the cheap footer signal — the sliver's own
-    * size is data-dependent and unknowable pre-run): 128 GiB ≈ SF1000,
-    * where the measured 0.3% big-order fraction serializes to ~100 MB —
-    * the guide's broadcast comfort edge. Past it both hints come off
-    * and the plan returns to the r15 shuffle-join shape. */
+    * at-rest fact bytes, since the sliver's own size is unknown before
+    * it runs: at 128 GiB ≈ SF1000 the 0.3% big-order fraction
+    * serializes to ~100 MB. Past it both hints come off. */
   private[graft] val BigOrdersHintMaxFactBytes: Long = 128L << 30
 
   /** q39: corpus SNAPSHOT DIFF — the dataset regression test every
@@ -1316,37 +1233,14 @@ object Relational {
     * (|parts|, not |lineitem|) and joins back as a broadcast scalar, so
     * the fact is scanned once at any scale. The closest group sits ≥0.2%
     * from the threshold on this data — three orders of magnitude above
-    * cross-engine float-sum noise (q16 precedent). */
-  def q31ImportantParts(spark: SparkSession, dir: String): DataFrame =
-    q31ImportantParts(spark, dir, checkpointDir = None)
-
-  /** `checkpointDir`-accepting form (r16, the q36/d07 knob): the pinned
-    * grouped relation is |parts| rows — SF-linear — and a localCheckpoint
-    * lives in executor storage, so on a real cluster it dies with an
-    * executor. Passing a reliable-FS dir swaps the pin for a parquet
-    * round-trip with identical consumers (delete the dir once consumed).
-    * `snapshot = false` exists for plan audits only (q36's spendRanks
-    * precedent): the eager localCheckpoint truncates lineage to `Scan
-    * ExistingRDD`, hiding the scan/exchange topology the audit pins. */
+    * cross-engine float-sum noise (q16 precedent). `pin` snapshots the
+    * grouped relation both aggregates read; [[Pin.Off]] is the
+    * plan-audit form, whose lineage still shows the scan and exchange a
+    * snapshot truncates to `Scan ExistingRDD`. */
   def q31ImportantParts(spark: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame =
-    q31ImportantParts(spark, dir, snapshot = true, checkpointDir)
-
-  private[graft] def q31ImportantParts(spark: SparkSession, dir: String,
-      snapshot: Boolean, checkpointDir: Option[String]): DataFrame = {
-    // r15b: repartition BEFORE the aggregate. Partkeys are scattered
-    // across scan tasks (parquet order is orderkey-clustered), so at
-    // any SF each map task sees ~rows/|tasks| rows over ~|parts| keys —
-    // map-side partial aggregation collapses ~nothing (measured 1.06×
-    // at sf10) while every task builds a ~2M-entry hash map to find
-    // that out. Pre-partitioning satisfies the aggregate's required
-    // distribution, so the planner drops the map-side pass entirely:
-    // the exchange carries the same columns either way, and the hash
-    // maps shrink from |parts| per map task to |parts|/|tasks| per
-    // reduce task (the cents projection still computes map-side,
-    // before the exchange). With the localCheckpoint and int-cents
-    // below, sf10 isolated wall 5.42 → 3.67 s, scan+exchange stage
-    // 85 → 52 executor-CPU-s.
+      pin: Pin = Pin.Local): DataFrame = {
+    // Partkeys are scattered across scan tasks, so a map-side partial
+    // aggregate collapses almost nothing; repartitioning first drops it.
     // cents is INT on the wire: a per-ROW revenue in cents is < 2^31 at
     // any SF (it is a price, not an aggregate) — 12 B/row instead of
     // 16 B across the query's one big exchange; the sum aggregates to
@@ -1358,21 +1252,9 @@ object Relational {
       .repartition(col("l_partkey"))
       .groupBy(col("l_partkey"))
       .agg(sum(col("cents")).as("rev"))
-    // materialize the grouped relation ONCE (q36's localCheckpoint
-    // precedent): it has two consumers (the mean and the join-back),
-    // and without the checkpoint each re-read the 582 MB exchange
-    // and re-ran the 60M-row aggregation (sf10 stage profile: two
-    // identical 16-18 CPU-s final-agg stages). |parts| rows is the
-    // bounded aggregate, not the fact — safe to pin at any SF. On a
-    // real cluster pass checkpointDir (reliable-FS parquet round-trip,
-    // q36's rule — localCheckpoint blocks die with an executor).
-    val perPart = (snapshot, checkpointDir) match {
-      case (false, _) => perPart0
-      case (true, None) => perPart0.localCheckpoint()
-      case (true, Some(d)) =>
-        perPart0.write.mode("overwrite").parquet(d + "/q31-perpart")
-        spark.read.parquet(d + "/q31-perpart")
-    }
+    // Two consumers (the mean and the join-back) read the bounded
+    // aggregate, so it is pinned rather than re-aggregated per consumer.
+    val perPart = pin(perPart0, "q31-perpart")
     val meanRev = perPart // mean stays in cents: exact long sum / count
       .agg((sum(col("rev")).cast("double") / count(lit(1))).as("mean_rev"))
     perPart.crossJoin(broadcast(meanRev))
@@ -1462,31 +1344,21 @@ object Relational {
     * in integer cents ([[centsOf]]), revenue and cost each rounded
     * per-item from identical IEEE products. */
   def q41ProfitByNation(spark: SparkSession, dir: String): DataFrame = {
-    val gearParts = Tables.part(spark, dir)
+    val part = Tables.part(spark, dir)
+    val gearParts = part
       .filter(col("p_name").like("%gear%"))
       .select(col("p_partkey"), col("p_retailprice"))
-    val supp = Tables.supplier(spark, dir)
+    val supplier = Tables.supplier(spark, dir)
+    val supp = supplier
       .join(broadcast(Tables.nation(spark, dir)),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"))
-    // r15: both dim sides broadcast explicitly — supp is the
-    // supplier-scale dim (q05's bound) and gearParts a name-filtered
-    // sliver of part projected to (key, price); the no-stats planner
-    // kept both as shuffle joins and exchanged the 60M-row fact TWICE
-    // (partkey, then suppkey). Broadcast, the whole query is one
-    // exchange-free scan into a ≤|nations|·|years|-group aggregate.
-    // Bound honesty: part is 20× supplier, so the gearParts hint is the
-    // measured choice for the gated rungs (≤3 MB there) and holds to
-    // ~SF1000; past that the hint comes off and the partkey exchange
-    // returns — supplier-side stays broadcast far further. r16: both
-    // come-off points are ENFORCED by the size gates (PartHintMaxBytes /
-    // SupplierHintMaxBytes), not by this comment.
+    // Both dim sides carry gated hints: the no-stats planner otherwise
+    // exchanges the 60M-row sf10 fact twice (partkey, then suppkey).
     Tables.lineitem(spark, dir)
-      .join(broadcastIfUnder(PartHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "part"))(gearParts),
+      .join(broadcastIfUnder(PartHintMaxBytes, part)(gearParts),
         col("l_partkey") === col("p_partkey"))
-      .join(broadcastIfUnder(SupplierHintMaxBytes,
-          Tables.parquetBytes(spark, dir, "supplier"))(supp),
+      .join(broadcastIfUnder(SupplierHintMaxBytes, supplier)(supp),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("n_name").as("nation"), year(col("l_shipdate")).as("o_year"))
       .agg(round(sum(centsOf(col("l_extendedprice") * (lit(1) - col("l_discount")))
@@ -1525,8 +1397,8 @@ object Relational {
     // orders keys bloom-shed the returned side before its exchange
     // ([[bloomShed]], 26× fewer fact rows shuffled at sf10); the join
     // drops the same rows either way.
-    bloomShedBig(spark, dir, ordQ.select(col("o_orderkey")), "o_orderkey",
-        returned, col("l_orderkey"))
+    bloomShedBig(ordQ.select(col("o_orderkey")), "o_orderkey", returned,
+        col("l_orderkey"))
       .join(ordQ, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
@@ -1638,34 +1510,19 @@ object Relational {
     * integer cents ([[centsOf]]) — the tie semantics are exact, no
     * float-equality trap.
     *
-    * The view is REFERENCED TWICE (winner filter + MAX), and Catalyst
-    * plans the two references as two fact scans (the MAX branch's
-    * aggregate chain doesn't canonicalize to the probe side's exchange,
-    * so AQE reuse never fires). The view is |suppliers| rows — tiny
-    * next to the fact — so it is snapshotted once (q36's rule;
-    * localCheckpoint here, the reliable-dir form is the same d07-style
-    * knob) and BOTH branches read the materialization: one fact scan
-    * total, spec-pinned. */
-  def q46TopSupplier(spark: SparkSession, dir: String): DataFrame =
-    q46TopSupplier(spark, dir, checkpointDir = None)
-
-  /** `checkpointDir`-accepting form (the d07/q36 knob): on a real
-    * cluster the view snapshot goes to the reliable FS — localCheckpoint
-    * lives on executor local storage and dies with an executor. */
+    * The view is read twice (winner filter + MAX), and Catalyst plans
+    * the two reads as two fact scans, so the |suppliers|-row view is
+    * snapshotted by `pin` and both branches read it: one fact scan,
+    * spec-pinned. */
   def q46TopSupplier(spark: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame = {
+      pin: Pin.Snapshot = Pin.Local): DataFrame = {
     val rev0 = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= ts("1997-10-01 00:00:00") &&
         col("l_shipdate") < ts("1998-01-01 00:00:00"))
       .groupBy(col("l_suppkey"))
       .agg(sum(centsOf(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         .as("total_cents"))
-    val rev = checkpointDir match {
-      case None => rev0.localCheckpoint()
-      case Some(d) =>
-        rev0.write.mode("overwrite").parquet(d + "/q46-rev")
-        spark.read.parquet(d + "/q46-rev")
-    }
+    val rev = pin(rev0, "q46-rev")
     val maxRev = rev.agg(max(col("total_cents")).as("max_cents"))
     rev.crossJoin(broadcast(maxRev))
       .filter(col("total_cents") === col("max_cents"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.functions.{VectorFunctions => VF, VectorSql => VS}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1341,20 +1341,11 @@ object Similarity {
   def s21GraphRefine(spark: SparkSession, dir: String, nLists: Int,
       nProbe: Int, rounds: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    // r16: the refine round consumes the kNN graph through FIVE lineage
-    // paths (fwd, rev, und twice in the hop-2 self-join, und again as
-    // the 1-hop candidate base) — without a pin the whole IVF
-    // build+probe subtree re-executes per consumer (only exchanges are
-    // reused; the p20/dfCapped disease). Pin the graph and the
-    // undirected edge list — k·|V| narrow rows, ~dim/3 smaller than the
-    // embeddings table itself — under the same at-rest size bound the
-    // p20 pin uses; past it the r15 lineage shape returns. sf0.1
-    // scoped A/B (same session shape, min-of-3): 1.69 → 1.31 s.
-    val pin = Tables.parquetBytes(spark, dir, "embeddings") <=
-      Pipelines.P20PinMaxBytes
-    def p(df: DataFrame): DataFrame = if (pin) df.localCheckpoint() else df
-    var g = p(s19bKnnGraphIvf(spark, dir, nLists, nProbe)
-      .select(col("query_id"), col("neighbor_id"), col("cosine")))
+    // A round reads the kNN graph through five lineage paths, so unpinned
+    // the whole IVF build and probe re-runs per consumer.
+    val pin = Pin.localIfUnder(Tables.atRestBytes(e))
+    var g = pin(s19bKnnGraphIvf(spark, dir, nLists, nProbe)
+      .select(col("query_id"), col("neighbor_id"), col("cosine")), "graph")
     var r = 0
     while (r < rounds) {
       val fwd = g.select(col("query_id"), col("neighbor_id"))
@@ -1364,7 +1355,7 @@ object Similarity {
         Seq(col("query_id")),
         Seq(col("cosine").desc, col("neighbor_id").asc), S21ReverseCap)
         .select(col("query_id"), col("neighbor_id"))
-      val und = p(fwd.unionByName(rev))
+      val und = pin(fwd.unionByName(rev), "und")
       val hop2 = und.as("e1").join(und.as("e2"),
           col("e1.neighbor_id") === col("e2.query_id"))
         .select(col("e1.query_id").as("query_id"),

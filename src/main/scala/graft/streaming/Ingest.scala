@@ -39,7 +39,7 @@ object Ingest {
     * append to a checkpointed parquet sink. AvailableNow drains what
     * exists then stops — swap for ProcessingTime in continuous use. */
   def streamIngest(spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 16): StreamingQuery =
+      checkpointLocation: String, maxFilesPerTrigger: Int = 16): StreamingQuery =
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(inDir)
@@ -47,7 +47,7 @@ object Ingest {
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .start()
 }

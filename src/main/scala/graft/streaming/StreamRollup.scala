@@ -82,11 +82,11 @@ object StreamRollup {
     * Events beyond the skew allowance are themselves dead-lettered into
     * the same sentinel — a day that hasn't happened yet is as bogus as
     * one retired years ago. */
-  def maintain(events: DataFrame, stateDir: String, checkpointDir: String,
+  def maintain(events: DataFrame, stateDir: String, checkpointLocation: String,
       keepVersions: Int = 3, retentionDays: Option[Int] = None,
       futureSkewDays: Int = 2): StreamingQuery =
     events.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.functions._
         val spark = batch.sparkSession

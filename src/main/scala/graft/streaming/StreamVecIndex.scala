@@ -106,10 +106,10 @@ object StreamVecIndex {
     * rule): past it, committed generations fold into base inside
     * foreachBatch — the quiet window is structural. */
   def maintain(vectors: DataFrame, cents: IndexedSeq[Array[Float]],
-      indexDir: String, checkpointDir: String,
+      indexDir: String, checkpointLocation: String,
       maxGenerations: Int = 64): StreamingQuery =
     vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processVecBatch(batch, cents, indexDir, batchId)
         val root = new org.apache.hadoop.fs.Path(indexDir)

@@ -185,26 +185,7 @@ class DedupSpec extends GraftSuite {
   test("d07 with a reliable checkpoint dir matches the localCheckpoint result") {
     // an executor loss mid-iteration kills the local-checkpoint path on a
     // real cluster; the reliable mode must be result-identical
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_d07_ck").toString
-    val reliable = Dedup.d07DupClusters(spark, sf, Some(ckDir)).collect()
-      .map(c => (c.getAs[Long]("cluster_id"), c.getAs[Long]("n_docs"), c.getAs[Long]("max_doc")))
-    val local = Dedup.d07DupClusters(spark, sf).collect()
-      .map(c => (c.getAs[Long]("cluster_id"), c.getAs[Long]("n_docs"), c.getAs[Long]("max_doc")))
-    assert(reliable.sorted.toSeq == local.sorted.toSeq)
-    // snapshots actually went through the reliable store
-    val subdirs = new java.io.File(ckDir).listFiles()
-    assert(subdirs != null && subdirs.nonEmpty,
-      "no checkpoint data written to the reliable dir")
-    // superseded round snapshots are deleted as rounds advance: only the
-    // static pair/edge snapshots and the FINAL round's dir may survive
-    // (repeated runs in a long-lived session must not accumulate rounds)
-    val roundDirs = subdirs.map(_.getName).filter(_.startsWith("round-"))
-    assert(roundDirs.length == 1,
-      s"superseded round checkpoints leaked: ${roundDirs.mkString(", ")}")
-    // snapshots are unmanaged parquet: no session-global checkpoint dir
-    // may leak from the call (SparkContext cannot unset one)
-    assert(spark.sparkContext.getCheckpointDir.isEmpty,
-      "d07 reliable path must not mutate the session checkpoint dir")
+    PinSpec.checkReliable(spark, sf, "d07")
   }
 
   test("d10 leakage: flagged eval docs genuinely share shingles with train") {
@@ -418,7 +399,7 @@ class DedupSpec extends GraftSuite {
     // the final no-change confirmation round).
     import spark.implicits._
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
-    val (labels, rounds) = Dedup.connectedComponents(spark, pairs, None)
+    val (labels, rounds) = Dedup.connectedComponents(spark, pairs)
     val got = labels.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
     assert(got.size == 64 && got.values.forall(_ == 0L),
@@ -426,7 +407,7 @@ class DedupSpec extends GraftSuite {
     assert(rounds <= 10, s"path-64 took $rounds rounds — pointer jump not effective")
     // and a star graph (diameter 2) still closes in a couple of rounds
     val star = (1L until 20L).map(i => (0L, i)).toDF("doc_i", "doc_j")
-    val (slabels, srounds) = Dedup.connectedComponents(spark, star, None)
+    val (slabels, srounds) = Dedup.connectedComponents(spark, star)
     assert(slabels.collect().forall(_.getAs[Long]("cluster") == 0L))
     assert(srounds <= 3, s"star took $srounds rounds")
   }
@@ -913,8 +894,8 @@ class DedupSpec extends GraftSuite {
         s"persistOcc=$p packedCanon=$k changed the cut list — knobs must be plan-only")
     }
     // the footer signals actually fire on the test corpus: small + narrow ids
-    assert(graft.Tables.parquetBytes(spark, sf, "documents") <=
-      Dedup.D19PersistOccMaxBytes)
+    assert(graft.Tables.atRestBytes(graft.Tables.documents(spark, sf)) <=
+      graft.Pin.MaxInputBytes)
     val range = graft.Tables.parquetLongColumnRange(spark, sf, "documents", "doc_id")
     assert(range.exists { case (lo, hi) => lo >= 0 && hi < (1L << 31) },
       s"expected footer doc_id stats to admit the packed form, got $range")

@@ -672,7 +672,7 @@ class PlanAuditSpec extends GraftSuite {
   test("q36: decile ranking range-partitions the data; no data-path ntile window") {
     // the lineage-shared (no-snapshot) form shows the range exchange and
     // must deduplicate its two consumers onto ONE reused materialization
-    val inner = planStr(Relational.spendRanks(spark, sf, snapshot = false))
+    val inner = planStr(Relational.spendRanks(spark, sf, Pin.Off))
     assert(inner.toLowerCase.contains("rangepartitioning"),
       s"two-phase ranking must range-repartition on the sort key:\n$inner")
     assert(inner.contains("ReusedExchange"),
@@ -878,15 +878,16 @@ class PlanAuditSpec extends GraftSuite {
     val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val dim = Relational.broadcastIfUnder(Long.MaxValue, 0L)(
-        Tables.part(spark, sf).select(col("p_partkey"), col("p_brand")))
+      val part = Tables.part(spark, sf)
+      val dim = Relational.broadcastIfUnder(Long.MaxValue, part)(
+        part.select(col("p_partkey"), col("p_brand")))
       val hinted = Tables.lineitem(spark, sf)
         .join(dim, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand")).count()
       assert(planStr(hinted).contains("BroadcastHashJoin"),
         s"under the bound the gate must emit the hint:\n${planStr(hinted)}")
-      val unhinted = Relational.broadcastIfUnder(0L, 1L)(
-        Tables.part(spark, sf).select(col("p_partkey"), col("p_brand")))
+      val unhinted = Relational.broadcastIfUnder(0L, part)(
+        part.select(col("p_partkey"), col("p_brand")))
       val plain = Tables.lineitem(spark, sf)
         .join(unhinted, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand")).count()
@@ -936,6 +937,7 @@ class PlanAuditSpec extends GraftSuite {
     // gate: at toy SF the fact is far under BloomShedMinFactBytes, so
     // the declared q03/q04/q42 plans carry NO bloom probe — the
     // driver-contract small-SF plans are unchanged by r16
+    assert(Tables.atRestBytes(big) < Relational.BloomShedMinFactBytes)
     Seq(Relational.q03ShippingPriority(spark, sf),
         Relational.q04SemiJoin(spark, sf),
         Relational.q42ReturnedTopCustomers(spark, sf)).foreach { df =>

@@ -238,23 +238,9 @@ class RelationalSpec extends GraftSuite {
   }
 
   test("q36: reliable-checkpoint path writes the snapshot to disk and matches") {
-    // the production knob (d07 precedent): the slice assignment goes to a
-    // reliable FS dir instead of executor-local storage, so the ranking
-    // survives executor loss — results must be identical to the default
-    val ckDir = java.nio.file.Files.createTempDirectory("q36-ck").toString
-    try {
-      val reliable = Relational.q36SpendDeciles(spark, sf, Some(ckDir)).collect()
-      val default = Relational.q36SpendDeciles(spark, sf).collect()
-      assert(reliable.toSeq.sortBy(_.getLong(0)) == default.toSeq.sortBy(_.getLong(0)))
-      val written = new java.io.File(ckDir, "q36-ranks").listFiles()
-      assert(written != null && written.nonEmpty,
-        "reliable path must materialize the snapshot under the checkpoint dir")
-      // the snapshot is unmanaged: no session-global checkpoint dir may
-      // leak from the call (r7 ADVICE — SparkContext cannot unset one)
-      assert(spark.sparkContext.getCheckpointDir.isEmpty,
-        "q36 reliable path must not mutate the session checkpoint dir")
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckDir))
+    // the slice assignment goes to a reliable FS dir instead of
+    // executor-local storage, so the ranking survives executor loss
+    PinSpec.checkReliable(spark, sf, "q36")
   }
 
   test("q40: every reported order's quantity sum verifies against lineitem") {
@@ -386,22 +372,14 @@ class RelationalSpec extends GraftSuite {
     val expect = perPart.filter(_._2 > 1.3 * mean).keySet
     assert(returned == expect, "q31 group-threshold membership diverged")
     rows.foreach(r => assert(r.getAs[Double]("x_mean") > 1.3))
-    // reliable-snapshot form (r16 — the d07/q36 knob threaded through
-    // q31): result-identical to the localCheckpoint default
-    val ckDir = java.nio.file.Files.createTempDirectory("q31ck").toString
-    val reliable =
-      Relational.q31ImportantParts(spark, sf, Some(ckDir)).collect()
-    assert(reliable.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq,
-      "q31 checkpointDir form diverged")
-    // snapshot=false (plan-audit form): the lineage is visible — the
-    // localCheckpoint default truncates to Scan ExistingRDD, which would
-    // hide the scan/exchange topology from plan pinning (r15 ADVICE)
-    val open = Relational.q31ImportantParts(spark, sf,
-      snapshot = false, checkpointDir = None)
+    // Pin.Off (plan-audit form): the lineage is visible — the Local
+    // default truncates to Scan ExistingRDD, which would hide the
+    // scan/exchange topology from plan pinning
+    val open = Relational.q31ImportantParts(spark, sf, graft.Pin.Off)
     assert(open.queryExecution.executedPlan.toString.contains("FileScan"),
-      "snapshot=false must expose the parquet scan for plan audits")
+      "Pin.Off must expose the parquet scan for plan audits")
     assert(open.collect().map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq,
-      "q31 snapshot=false form diverged")
+      "q31 Pin.Off form diverged")
   }
 
   test("registerAll exposes the whole catalog to SQL with graft functions") {
@@ -448,10 +426,5 @@ class RelationalSpec extends GraftSuite {
     assert(got.map(_._1).toSet == want,
       s"argmax set mismatch: got ${got.map(_._1).toSet}, want $want")
     assert(got.forall(_._2 == maxCents), "winner rows must all carry the max revenue")
-    // reliable-snapshot form (the d07/q36 knob) is result-identical
-    val dir = java.nio.file.Files.createTempDirectory("q46ck").toString
-    val reliable = Relational.q46TopSupplier(spark, sf, Some(dir)).collect()
-      .map(r => (r.getAs[Long]("s_suppkey"), r.getAs[Long]("total_cents")))
-    assert(reliable.toSeq == got.toSeq, "checkpointDir form diverged")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** [[Tables.load]]'s schema memo: reused while a table is unchanged,
@@ -79,5 +79,26 @@ class TablesSpec extends GraftSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("atRestBytes sums the scan's own file listing and reads one table only") {
+    import org.apache.hadoop.fs.Path
+    Tables.all.foreach { name =>
+      val root = new Path(s"$sf/$name.parquet")
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val files = fs.listFiles(root, true)
+      var listed = 0L
+      while (files.hasNext) {
+        val f = files.next()
+        if (f.getPath.getName.endsWith(".parquet")) listed += f.getLen
+      }
+      assert(listed > 0, s"$name: the test listing found no parquet file")
+      assert(Tables.atRestBytes(Tables.byName(spark, sf, name)) == listed,
+        s"$name: atRestBytes disagrees with a Hadoop listing")
+    }
+    intercept[IllegalArgumentException](Tables.atRestBytes(spark.range(3).toDF()))
+    val join = Tables.orders(spark, sf)
+      .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
+    intercept[IllegalArgumentException](Tables.atRestBytes(join))
   }
 }
