@@ -72,12 +72,19 @@ object Tables {
     * read, no job. Every size gate reads its table through here, from
     * the same DataFrame its query scans. Throws unless `table` reads
     * exactly one file relation, so a gate cannot silently sum a join. */
-  def atRestBytes(table: DataFrame): Long = fileIndexes(table) match {
-    case Seq(index) => index.allFiles().map(_.getLen).sum
-    case found => throw new IllegalArgumentException(
-      s"atRestBytes needs a DataFrame that reads exactly one file relation; " +
-        s"this one reads ${found.size}")
-  }
+  def atRestBytes(table: DataFrame): Long =
+    fileIndex(table, "atRestBytes").allFiles().map(_.getLen).sum
+
+  /** The file index of the one file relation `table` reads; throws
+    * naming `caller` when it reads none or several. */
+  private def fileIndex(table: DataFrame, caller: String)
+      : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+    fileIndexes(table) match {
+      case Seq(index) => index
+      case found => throw new IllegalArgumentException(
+        s"$caller needs a DataFrame that reads exactly one file relation; " +
+          s"this one reads ${found.size}")
+    }
 
   /** The file indexes of every file relation in `df`'s analyzed plan. */
   private def fileIndexes(df: DataFrame)
@@ -173,15 +180,17 @@ object Tables {
 
   private val rowCountMemo = new StateMemo[String, Long]
 
-  /** Footer-statistics (min, max) of an integer column across a table's
-    * parquet files — driver-side, no data pages (the same footer the
-    * scan planner reads). None when any row group lacks the statistic
+  /** Footer-statistics (min, max) of an integer column across the
+    * parquet files of the one table `table` reads, taken from the
+    * listing its file index already holds (as [[atRestBytes]] does) —
+    * driver-side, no data pages (the same footer the scan planner
+    * reads). None when any row group lacks the statistic
     * (write-side stats disabled) — callers must treat None as
     * "unbounded" and take their conservative path. Plan-build-time
     * sizing signal (d19's packed-canonical bit budget).
     *
     * Driver-stall hygiene (this runs on every d19 plan construction):
-    *  - MEMOIZED per (table path, column, table state); a rewritten
+    *  - MEMOIZED per (table root, column, table state); a rewritten
     *    table invalidates naturally.
     *  - SHORT-CIRCUITS on the first row group lacking the stat (the
     *    whole answer is already None — no reason to open the rest).
@@ -190,12 +199,13 @@ object Tables {
     *    decide a one-exchange plan optimization is the wrong trade —
     *    past the cap, answer None (callers' conservative path) after
     *    only the listing. */
-  def parquetLongColumnRange(spark: SparkSession, dir: String, name: String,
-      column: String): Option[(Long, Long)] = {
+  def parquetLongColumnRange(table: DataFrame, column: String): Option[(Long, Long)] = {
     import scala.jdk.CollectionConverters._
-    val Listing(root, conf, files) = listing(spark, dir, name)
+    val index = fileIndex(table, "parquetLongColumnRange")
+    val files = index.allFiles()
     if (files.length > FooterProbeMaxFiles) return None
-    columnRangeMemo.getOrElseUpdate((root.toString, column), fingerprint(files)) {
+    val conf = table.sparkSession.sessionState.newHadoopConf()
+    columnRangeMemo.getOrElseUpdate((index.rootPaths.mkString(","), column), fingerprint(files)) {
       var lo = Long.MaxValue
       var hi = Long.MinValue
       var missing = false

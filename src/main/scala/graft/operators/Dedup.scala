@@ -1070,7 +1070,7 @@ object Dedup {
     d19DupSpansOf(docs, spanLen,
       persistOcc = Tables.atRestBytes(docs) <= Pin.MaxInputBytes,
       packedCanon =
-        Tables.parquetLongColumnRange(spark, dir, "documents", "doc_id")
+        Tables.parquetLongColumnRange(docs, "doc_id")
           .exists { case (lo, hi) => lo >= 0 && hi < (1L << 31) })
   }
 

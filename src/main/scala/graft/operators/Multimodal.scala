@@ -262,8 +262,8 @@ object Multimodal {
     * are dropped from the band index at the source (`Dedup.dfCapped`,
     * m05's rule); the oracle mirror applies the IDENTICAL exclusion, so
     * the entry stays hash-gated even where the cap bites. 64 sits far
-    * above any organic fp multiplicity in the gate corpora (M04Ladder
-    * measures max fp df = 3 at sf0.1, 10 at docs4x, 23 at docs16x —
+    * above any organic fp multiplicity in the gate corpora
+    * (M04_LADDER_r15.json: max fp df = 3 at sf0.1, 10 at docs4x, 23 at docs16x —
     * the scaled multiplicities are ScaleGen replica correlation) and
     * far below a padding pile; a group at the
     * cap still emits ≤ cap² ≈ 4k pairs — bounded, not quadratic in the

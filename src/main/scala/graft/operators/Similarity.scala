@@ -27,7 +27,7 @@ object Similarity {
     * the corpus (≈ log2(n/c) for a target per-bucket candidate set c) —
     * a 100 TB corpus wants 20+.
     *
-    * Measured on sf0.1 (AnnTune sweep; recall@3 vs exact / candidate
+    * Measured on sf0.1 (a bits x probe sweep; recall@3 vs exact / candidate
     * rows out of 16k scored pairs): 8 bits no-probe 0.000/71,
     * 8 bits probed 0.125/566, 10 bits probed 0.042/186, 12 bits probed
     * 0.042/53. The default is the recall-BEST sweep point (8 bits +

@@ -144,11 +144,6 @@ object TopK {
     * Output rows keep the input schema; per-group order is NOT
     * guaranteed — apply a final orderBy/rank on the (tiny) result. */
   def perGroup(df: DataFrame, keys: Seq[Column], orderBy: Seq[Column], k: Int): DataFrame = {
-    // self-register on sessions built without GraftExtensions
-    val exp = df.sparkSession.experimental
-    if (!exp.extraStrategies.contains(TopKStrategy)) {
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-    }
     val sortOrders = orderBy.map(c => Shims.expression(c) match {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)

@@ -896,7 +896,7 @@ class DedupSpec extends GraftSuite {
     // the footer signals actually fire on the test corpus: small + narrow ids
     assert(graft.Tables.atRestBytes(graft.Tables.documents(spark, sf)) <=
       graft.Pin.MaxInputBytes)
-    val range = graft.Tables.parquetLongColumnRange(spark, sf, "documents", "doc_id")
+    val range = graft.Tables.parquetLongColumnRange(graft.Tables.documents(spark, sf), "doc_id")
     assert(range.exists { case (lo, hi) => lo >= 0 && hi < (1L << 31) },
       s"expected footer doc_id stats to admit the packed form, got $range")
     // persist hygiene: the one-slot registry means a SECOND corpus's
@@ -966,16 +966,16 @@ class DedupSpec extends GraftSuite {
     val dir = java.nio.file.Files.createTempDirectory("rangecache").toString
     Seq(3L, 9L).toDF("doc_id").withColumn("text", lit("x"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(Tables.parquetLongColumnRange(spark, dir, "documents", "doc_id")
+    assert(Tables.parquetLongColumnRange(Tables.documents(spark, dir), "doc_id")
       == Some((3L, 9L)))
     // a repeat call answers from the memo (same listing fingerprint)
-    assert(Tables.parquetLongColumnRange(spark, dir, "documents", "doc_id")
+    assert(Tables.parquetLongColumnRange(Tables.documents(spark, dir), "doc_id")
       == Some((3L, 9L)))
     // a rewrite produces new part-file names — the fingerprint turns
     // over and the memo must NOT serve the stale range
     Seq(-5L, 4L, 7L).toDF("doc_id").withColumn("text", lit("x"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(Tables.parquetLongColumnRange(spark, dir, "documents", "doc_id")
+    assert(Tables.parquetLongColumnRange(Tables.documents(spark, dir), "doc_id")
       == Some((-5L, 7L)),
       "rewritten table served a stale memoized range")
     // parquetRowCount shares the memo discipline (r12 review: the
