@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** The runnable NIGHTLY dedup ops main (round 12) — the d18 production
+/** The runnable NIGHTLY dedup ops main — the d18 production
   * cycle (build → probe → absorb → compact) as a schedulable command,
   * not just a shape living inside specs and the streaming twins.
   *
@@ -67,40 +67,29 @@ object Nightly {
     val committedMax = gensById.map(_._1).foldLeft(horizon0)(math.max)
     val arrivals = spark.read.parquet(arrivalsDir)
       .select(col("doc_id"), col("text"))
-    // Crash-window closure (r12 review): a night that died AFTER the
-    // absorb commit (during compaction, the pairs write, or the summary)
-    // must RESUME under its own id on relaunch — committedMax + 1 would
-    // silently re-absorb the same arrivals as a "new" night, doubling
-    // d18's df counts with no refusal firing. Detection reuses
-    // processBatch's replay rule: if the NEWEST committed generation
-    // content-matches what this batch would absorb, this night already
-    // absorbed — replay it (the absorb content-compares to a no-op and
-    // the pair report recomputes identically, because the probe reads
-    // the tree WITHOUT the batch's own generation). Identical content
-    // under two genuinely different nights is impossible within d18's
-    // id-disjointness contract (same rows = same doc_ids = the
-    // re-crawl breach the self-pair alert exists for).
-    // Steady-state cost discipline (r12 ADVICE): a HEALTHY night (new
-    // content) must not pay two exceptAll jobs to learn it isn't a
-    // replay. Prior's row count is parquet-footer-served (no data
-    // pages); the shingled arrivals are persisted so the count and the
-    // compare share one shingle pass; and with EQUAL multiset sizes one
-    // empty exceptAll direction already proves multiset equality, so
-    // the second direction is dropped. The verdict is passed into
-    // processBatch so the comparison never runs twice.
+    // A night that died AFTER the absorb commit (during compaction, the
+    // pairs write, or the summary) must RESUME under its own id on
+    // relaunch — committedMax + 1 would silently re-absorb the same
+    // arrivals as a "new" night, doubling d18's df counts with no
+    // refusal firing. So if the NEWEST committed generation holds the
+    // rows this batch would absorb (Commit.sameRows, the replay rule),
+    // this night already absorbed: replay it (the pair report
+    // recomputes identically, because the probe reads the tree WITHOUT
+    // the batch's own generation). Identical content under two
+    // genuinely different nights is impossible within d18's
+    // id-disjointness contract (same rows = same doc_ids = the re-crawl
+    // breach the self-pair alert exists for). A healthy night pays one
+    // footer-served count and one shingle pass to learn it is not a
+    // replay, and the verdict is passed into processBatch so the
+    // comparison never runs twice.
     var verifiedReplay = false
     val batchId = explicitBatchId.getOrElse {
       val replayOfLast = committedMax > horizon0 &&
         gensById.find(_._1 == committedMax).exists { case (_, p) =>
           val fresh = operators.Dedup.dfCapped(
             operators.Dedup.shingleIndexRows(arrivals), "h", batchMaxDf)
-            .persist()
-          try {
-            val prior = spark.read.parquet(p.toString)
-              .select(fresh.columns.map(col): _*)
-            fresh.count() == prior.count() &&
-              prior.exceptAll(fresh).limit(1).count() == 0
-          } finally fresh.unpersist(false)
+          graft.sources.Commit.sameRows(
+            spark.read.parquet(p.toString).select(fresh.columns.map(col): _*), fresh)
         }
       verifiedReplay = replayOfLast
       if (replayOfLast) committedMax else committedMax + 1

@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The runnable RELEASE build ops main (round 13) — the p20 staged
+/** The runnable RELEASE build ops main — the p20 staged
   * clean → neardup-keep → span-surgery → leakage-repair chain as a
   * schedulable command ([[Nightly]]'s precedent: the second half of the
   * ops story; a corpus team runs `Nightly` every night and `Release`
   * every release cut).
   *
   * One invocation = one release build attempt: every stage publishes
-  * CRASH-SAFE under `workDir` (tmp-write + rename, `_SUCCESS`-gated —
-  * [[graft.operators.Pipelines.p20StagesCheckpointed]]'s contract
-  * verbatim, because that IS the body), so a killed build re-launched
+  * CRASH-SAFE under `workDir` ([[graft.sources.Commit.publishIfAbsent]],
+  * through [[graft.operators.Pipelines.p20StagesCheckpointed]], which
+  * IS the body), so a killed build re-launched
   * with the same arguments resumes from the last committed stage
   * byte-identically and completed stages never recompute. On top of the
   * four corpus stages it publishes the release DATASHEET
@@ -50,9 +50,9 @@ object Release {
       : (DataFrame, DataFrame) = {
     val audit =
       operators.Pipelines.p20ReleaseBuild(spark, corpusDir, workDir, knobs)
-    // the datasheet is artifact #6 under the SAME resume contract: a
-    // committed sheet is served, never recomputed (its sections scan
-    // the full released corpus — not free at release scale)
+    // the datasheet publishes like the stages: a committed sheet is
+    // served, never recomputed (its sections scan the full released
+    // corpus — not free at release scale)
     val sheet = operators.Pipelines.publishArtifact(spark, workDir, "datasheet")(
       operators.Pipelines.p21ReleaseDatasheet(spark, corpusDir, workDir, knobs))
     (audit, sheet)

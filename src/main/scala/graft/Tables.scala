@@ -96,15 +96,15 @@ object Tables {
       .collect { case index: PartitioningAwareFileIndex => index }
   }
 
-  /** One table state: path, length and modification time of every leaf
-    * file, in path order, hashed. Rewriting a table in place changes at
-    * least one of the three, so every memo here keys its entries on
-    * this. */
+  /** One table state, as hex: path, length and modification time of
+    * every leaf file, in path order, hashed. Rewriting a table in place
+    * changes at least one of the three, so every memo here, and every
+    * persisted index, keys its entries on this. */
   private def fingerprint(files: Seq[org.apache.hadoop.fs.FileStatus]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     files.map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
       .foreach { s => md.update(s.getBytes("UTF-8")); md.update(0.toByte) }
-    s"${files.length}:" + md.digest().map(b => f"$b%02x").mkString
+    md.digest().map(b => f"$b%02x").mkString
   }
 
   /** A memo of values derived from one table state: each key holds the
@@ -151,9 +151,15 @@ object Tables {
     * the driver never serializes minutes of remote opens. A row count
     * has no conservative None answer, so it distributes instead of
     * capping. */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
+  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long =
+    parquetRowsAndState(spark, dir, name)._1
+
+  /** [[parquetRowCount]] and the [[fingerprint]] of the table state it
+    * counted, from one listing. */
+  def parquetRowsAndState(spark: SparkSession, dir: String, name: String): (Long, String) = {
     val Listing(root, conf, files) = listing(spark, dir, name)
-    rowCountMemo.getOrElseUpdate(root.toString, fingerprint(files))(
+    val state = fingerprint(files)
+    (rowCountMemo.getOrElseUpdate(root.toString, state)(
       if (files.length <= FooterProbeMaxFiles) {
         files.map { f =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
@@ -175,7 +181,7 @@ object Tables {
               try r.getRecordCount finally r.close()
             }
           }.reduce(_ + _)
-      })
+      }), state)
   }
 
   private val rowCountMemo = new StateMemo[String, Long]

@@ -626,11 +626,10 @@ object Dedup {
       .withColumn("bucket", idBucket(col("vec_id")))
     val train = e.filter(col("bucket") < 80).select(col("vec_id"), col("embedding"))
     val evalSplit = e.filter(col("bucket") >= 80).select(col("vec_id"), col("embedding"))
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
     // persisted under its own tag: the train-split index is a DIFFERENT
     // corpus from s06's full-table index (Similarity.rangeIndexPersisted)
     val (assigned, stats, cents) =
-      Similarity.rangeIndexPersisted(spark, dir, "d13", train, n, nLists)
+      Similarity.rangeIndexPersisted(spark, dir, "d13", train, nLists)
     val q = evalSplit
       .withColumn("cosines", Similarity.centroidCosines(cents))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),

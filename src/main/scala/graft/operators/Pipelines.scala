@@ -540,7 +540,7 @@ object Pipelines {
     surged.join(leaked, Seq("doc_id"), "left_anti")
   }
 
-  /** The staged release build's tuning knobs (r13 — threaded through
+  /** The staged release build's tuning knobs (threaded through
     * `graft.Release` so an operator tunes the chain without Scala):
     * stage-1 cleaning thresholds + the stage-4 leakage threshold.
     * Recorded in the workDir on first build and REFUSED on mismatch at
@@ -554,9 +554,8 @@ object Pipelines {
 
   /** The STAGED release build the p20 doc promised ("a real release
     * build checkpoints between stages — d07's rule"): each stage's full
-    * corpus publishes CRASH-SAFE under `workDir` (write to a fresh tmp,
-    * rename into `stage<i>-<name>` — readers only ever see a complete,
-    * `_SUCCESS`-marked artifact) and every stage computes FROM THE
+    * corpus publishes CRASH-SAFE under `workDir` as `stage<i>-<name>`
+    * ([[publishArtifact]]) and every stage computes FROM THE
     * PREVIOUS STAGE'S ARTIFACT, never from recomputed lineage — so a
     * build killed between stages resumes from the last committed stage
     * byte-identically, and the double-execution the one-shot chain
@@ -590,41 +589,19 @@ object Pipelines {
       workDir: String, knobs: P20Knobs = P20Knobs()): DataFrame =
     p20StagesCheckpointed(spark, dir, workDir, knobs).repaired
 
-  /** Crash-safe artifact publish under a build workDir (write to a
-    * fresh `.tmp-*`, rename into `name` — readers only ever see a
-    * complete, `_SUCCESS`-marked artifact; a committed artifact is
-    * served as-is and `make` never runs). Factored from the staged p20
-    * build (r13) so the release datasheet — and any future build-chain
-    * artifact — publishes under the same resume contract. Sweeps THIS
-    * artifact's orphaned `.tmp-<name>-*` debris first (r13 ADVICE: the
-    * datasheet is a SQL TVF any session can invoke, so a blanket
-    * `.tmp-*` sweep would let two concurrent queries on one workDir
-    * delete each other's in-flight writes; per-prefix scoping keeps
-    * cleanup complete — a crashed write of X is swept by the next
-    * publish of X, which every resume path reaches — while concurrent
-    * DIFFERENT-artifact publishes can no longer interfere. Two
-    * concurrent publishes of the SAME artifact remain the caller's
-    * single-builder contract; never touches committed artifacts). */
+  /** A build-chain artifact under `workDir`, published once through
+    * [[graft.sources.Commit.publishIfAbsent]]: readers only ever see a
+    * complete, committed artifact, and a committed one is served as-is
+    * without running `make`. Single builder per artifact name: the
+    * datasheet is a SQL TVF any session can invoke, and the sweep of a
+    * crashed write's tmp is scoped to its own name, so concurrent
+    * publishes of DIFFERENT artifacts never interfere. */
   private[graft] def publishArtifact(spark: SparkSession, workDir: String,
       name: String)(make: => DataFrame): DataFrame = {
-    val rootP = new org.apache.hadoop.fs.Path(workDir)
-    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(rootP)
-    fs.listStatus(rootP).map(_.getPath)
-      .filter(_.getName.startsWith(s".tmp-$name-"))
-      .foreach(fs.delete(_, true))
-    val dst = new org.apache.hadoop.fs.Path(rootP, name)
-    val committed = fs.exists(dst) &&
-      fs.exists(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"))
-    if (!committed) {
-      if (fs.exists(dst)) fs.delete(dst, true) // crashed write's debris
-      val tmp = new org.apache.hadoop.fs.Path(rootP,
-        s".tmp-$name-${System.nanoTime()}")
-      try {
-        make.write.parquet(tmp.toString)
-        require(fs.rename(tmp, dst), s"failed to publish $tmp -> $dst")
-      } finally if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
+    val dst = new org.apache.hadoop.fs.Path(workDir, name)
+    graft.sources.Commit.publishIfAbsent(
+      dst.getFileSystem(spark.sessionState.newHadoopConf()), dst)(
+      tmp => make.write.parquet(tmp.toString))
     spark.read.parquet(dst.toString)
   }
 
@@ -632,38 +609,19 @@ object Pipelines {
       workDir: String, knobs: P20Knobs = P20Knobs()): P20Stages = {
     // knob pinning: the resume contract serves committed stages as-is,
     // so a relaunch under DIFFERENT knobs would silently mix corpora
-    // built under two regimes — record the knobs on first build
-    // (atomic create-then-rename) and refuse loudly on mismatch
-    val rootP = new org.apache.hadoop.fs.Path(workDir)
-    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(rootP)
-    val kPath = new org.apache.hadoop.fs.Path(rootP, "knobs")
-    if (fs.exists(kPath)) {
-      val in = fs.open(kPath)
-      val prior = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      require(prior == knobs.marker,
-        s"workDir $workDir was built under different knobs ($prior) than " +
-          s"requested (${knobs.marker}) — resuming would mix stages from " +
-          "two regimes. Use a fresh workDir or the original knobs.")
-    } else {
-      // sweep a crashed attempt's marker tmp before writing ours
-      fs.listStatus(rootP).map(_.getPath)
-        .filter(_.getName.startsWith(".tmpk-"))
-        .foreach(fs.delete(_, false))
-      val tmp = new org.apache.hadoop.fs.Path(rootP,
-        s".tmpk-knobs-${System.nanoTime()}")
-      val out = fs.create(tmp, true)
-      try out.write(knobs.marker.getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmp, kPath)) { // lost a race to a twin builder:
-        fs.delete(tmp, true)        // re-check against the winner's marker
-        val in = fs.open(kPath)
-        val prior = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        require(prior == knobs.marker,
-          s"workDir $workDir was concurrently pinned to different knobs ($prior)")
-      }
-    }
+    // built under two regimes — the first build publishes its knobs as
+    // an artifact, and every later build (or a twin that lost the
+    // publish race) refuses loudly on mismatch. A `knobs` FILE is an
+    // older build's pin, which this build cannot read.
+    val kPath = new org.apache.hadoop.fs.Path(workDir, "knobs")
+    require(!kPath.getFileSystem(spark.sessionState.newHadoopConf()).isFile(kPath),
+      s"workDir $workDir was pinned by an older build (a knobs file) — use a fresh workDir")
+    val prior = publishArtifact(spark, workDir, "knobs")(
+      spark.createDataFrame(Seq(Tuple1(knobs.marker))).toDF("marker")).head().getString(0)
+    require(prior == knobs.marker,
+      s"workDir $workDir was built under different knobs ($prior) than " +
+        s"requested (${knobs.marker}) — resuming would mix stages from " +
+        "two regimes. Use a fresh workDir or the original knobs.")
     def artifact(name: String)(make: => DataFrame): DataFrame =
       publishArtifact(spark, workDir, name)(make)
     val _ = artifact("stage0-raw") {

@@ -208,33 +208,39 @@ object Similarity {
     * (spec-pinned). */
   private[graft] def s03Index(spark: SparkSession, dir: String,
       nLists: Int): (DataFrame, DataFrame) = {
+    val (path, n) = corpusIndex(spark, dir, "s03", nLists)
+    ivfFit(spark, path,
+      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), n, nLists)
+  }
+
+  /** The coarse quantizer's one fit, shared by [[s03Index]] and
+    * [[refitIndex]]: KMeans on a systematic vec_id-stride sample of
+    * about 4096 rows of `corpus` (vec_id, embedding), every row
+    * assigned to its nearest list, and both tables published at `path`
+    * unless already committed there. */
+  private def ivfFit(spark: SparkSession, path: String, corpus: DataFrame,
+      n: Long, nLists: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val maxFit = 4096
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir, "s03", nLists, n)
-    if (!ivfExists(spark, path)) {
-      val e = Tables.embeddings(spark, dir)
-        .withColumn("features", array_to_vector(col("embedding")))
-      val stride = math.max(1L, n / maxFit)
+    publishIndex(spark, path) { tmp =>
+      val e = corpus.withColumn("features", array_to_vector(col("embedding")))
+      val stride = math.max(1L, n / 4096)
       // cached: KMeans re-scans its input per iteration — without this
       // the full parquet is re-read 5x before the index is even built
       val fitSample = e.filter(pmod(col("vec_id"), lit(stride)) === 0)
         .select(col("features")).cache()
       val model = try new KMeans().setK(nLists).setSeed(42).setMaxIter(5)
         .fit(fitSample) finally fitSample.unpersist(false)
-      val assigned = model.transform(e)
+      // clustered by list: members of a probed list are contiguous at
+      // rest — the layout a real IVF serves scans from
+      model.transform(e)
         .select(col("vec_id"), col("embedding"), col("prediction").as("list_id"))
-      val centDf = spark.createDataFrame(
+        .repartition(col("list_id")).write.parquet(tmp + "/assigned")
+      spark.createDataFrame(
         model.clusterCenters.toIndexedSeq.zipWithIndex.map { case (c, i) =>
           (i, c.toArray.map(_.toFloat))
         }).toDF("list_id", "centroid")
-      publishIndex(spark, path) { tmp =>
-        // clustered by list: members of a probed list are contiguous at
-        // rest — the layout a real IVF serves scans from
-        assigned.repartition(col("list_id")).write.parquet(tmp + "/assigned")
-        centDf.coalesce(1).write.parquet(tmp + "/centroids")
-      }
+        .coalesce(1).write.parquet(tmp + "/centroids")
     }
     (spark.read.parquet(path + "/assigned"),
       spark.read.parquet(path + "/centroids"))
@@ -247,82 +253,49 @@ object Similarity {
     spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
       .stripPrefix("file:") + "/graft_ivf"
 
-  /** Cheap content fingerprint of the corpus behind every persisted
-    * index here (all families — s03/s06/d13/pq/ivfpq — fit from the
-    * embeddings table): a hash of the sorted (name, length, mtime)
-    * parquet file listing. One FS listStatus per key computation — a
-    * single NameNode RPC at scale, no data read. An in-place corpus
-    * regeneration changes file mtimes (and almost always lengths), so
-    * the key changes and the index rebuilds instead of silently serving
-    * stale contents. */
-  private[graft] def corpusFingerprint(spark: SparkSession, dir: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir + "/embeddings.parquet")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val listing = fs.listStatus(p).filter(_.isFile)
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-        .sortBy(_._1).mkString("|")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(listing.getBytes("UTF-8"))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString
-    } catch { case _: java.io.IOException => "0" }
-
   /** Identity key of a persisted index: corpus dir, family tag, list
-    * count, corpus ROW COUNT, and a CONTENT fingerprint of the source
-    * parquet files ([[corpusFingerprint]]) — a regenerated corpus (even
-    * at equal cardinality: new seed, generator change) can never be
-    * served a stale index. [[dropIvfIndex]] remains the explicit hook. */
+    * count, row count `n`, and the embeddings table state
+    * ([[Tables.parquetRowsAndState]]) as an `_f<hex>` suffix — a
+    * regenerated corpus (even at equal cardinality: new seed, generator
+    * change) can never be served a stale index. [[dropIvfIndex]]
+    * remains the explicit hook. */
   private[graft] def ivfIndexPath(spark: SparkSession, dir: String,
       tag: String, nLists: Int, n: Long): String =
-    s"${ivfRoot(spark)}/${tag}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
-      s"_n${n}_k${nLists}_f${corpusFingerprint(spark, dir)}"
+    indexPath(spark, dir, tag, nLists, n,
+      Tables.parquetRowsAndState(spark, dir, "embeddings")._2)
 
-  private def ivfExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  private def indexPath(spark: SparkSession, dir: String, tag: String,
+      nLists: Int, n: Long, state: String): String =
+    s"${ivfRoot(spark)}/${tag}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
+      s"_n${n}_k${nLists}_f${state.take(16)}"
+
+  /** [[ivfIndexPath]] of an index over the whole embeddings table, and
+    * the table's row count, from one listing. */
+  private def corpusIndex(spark: SparkSession, dir: String, tag: String,
+      nLists: Int): (String, Long) = {
+    val (n, state) = Tables.parquetRowsAndState(spark, dir, "embeddings")
+    (indexPath(spark, dir, tag, nLists, n, state), n)
   }
 
-  /** Crash-safe publish (Compaction's rename-swap rule): tables are
-    * written under a fresh tmp dir and RENAMED into place, so readers
-    * only ever see a complete index. A concurrent builder that loses the
-    * rename race deletes its tmp and reads the winner — harmless, since
-    * the fit is deterministic and both indexes are identical.
-    *
-    * LocalFS caveats this handles (HDFS rename is atomic and needs
-    * none of it): RawLocalFileSystem.rename onto an EXISTING dst falls
-    * back to FileUtil.copy, which would copy the loser's tmp INTO the
-    * published index as a stray child instead of returning false — so
-    * the rename is only attempted when dst is absent, any stray child
-    * is removed after, and tmp is deleted unconditionally in a finally
-    * (also covering a crashed write()). Leftover `.tmp-*` siblings from
-    * builders that died before their finally, and stale-fingerprint
-    * siblings of this index (superseded corpus generations,
-    * [[corpusFingerprint]]), are swept on every successful publish. */
+  /** Publish a persisted index at `path` unless it is committed there
+    * ([[graft.sources.Commit.publishIfAbsent]]; `write` gets the tmp
+    * dir and runs only when building). A build also sweeps this index's
+    * stale-key siblings: superseded corpus states, and the tmps their
+    * builds left. */
   private def publishIndex(spark: SparkSession, path: String)
       (write: String => Unit): Unit = {
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(dst.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(path + s".tmp-${System.nanoTime()}")
-    try {
-      write(tmp.toString)
-      if (!fs.exists(dst)) fs.rename(tmp, dst)
-      val stray = new org.apache.hadoop.fs.Path(dst, tmp.getName)
-      if (fs.exists(stray)) fs.delete(stray, true)
-    } finally {
-      if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (graft.sources.Commit.publishIfAbsent(fs, dst)(tmp => write(tmp.toString))) {
+      val stem = java.util.regex.Pattern.quote(
+        dst.getName.replaceAll("_f[0-9a-f]+$", ""))
+      fs.listStatus(dst.getParent).map(_.getPath)
+        .filter { p =>
+          val name = graft.sources.Commit.artifactName(p.getName)
+          name != dst.getName && name.matches(s"${stem}_f[0-9a-f]+")
+        }
+        .foreach(fs.delete(_, true))
     }
-    val stem = java.util.regex.Pattern.quote(
-      dst.getName.replaceAll("_f[0-9a-f]+$", ""))
-    val keep = dst.getName
-    fs.listStatus(dst.getParent).map(_.getPath)
-      .filter { p =>
-        val nm = p.getName
-        nm != keep &&
-          (nm.matches(s"$stem(_f[0-9a-f]+)?\\.tmp-\\d+") ||
-            nm.matches(s"${stem}_f[0-9a-f]+"))
-      }
-      .foreach(fs.delete(_, true))
   }
 
   /** Drop one persisted index (test/regeneration hook). */
@@ -336,19 +309,15 @@ object Similarity {
     * drift signal. When streamed arrivals concentrate where the frozen
     * quantizer has little resolution (`StreamVecIndex.refitDecision`),
     * the remedy is exactly the batch build run again over base corpus ∪
-    * arrivals: same deterministic stride fit ([[s03Index]]'s rule, one
-    * stride over the union), same clustered-by-list layout, published
-    * through the same crash-safe [[publishIndex]] rename under its own
-    * family tag (`s03refit`) keyed by the COMBINED row count — so a
+    * arrivals: the same [[ivfFit]] over the union, published under its
+    * own family tag (`s03refit`) keyed by the COMBINED row count — so a
     * later refit over more arrivals gets a fresh key and the sweep
     * deletes the superseded generation. At 100 TB this is the scheduled
-    * offline job the drift threshold triggers; the streamed version dirs
-    * it absorbed are then compacted away by the caller
+    * offline job the drift threshold triggers; the streamed generations
+    * it absorbed are then retired by the caller
     * (`StreamVecIndex.maybeRefit`). */
   private[graft] def refitIndex(spark: SparkSession, dir: String,
       streamed: DataFrame, nLists: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     // Dedup by vec_id: re-absorbing arrivals that a crashed prior refit
@@ -372,8 +341,8 @@ object Similarity {
       .groupBy(col("vec_id"))
       .agg(max_by(col("embedding"),
         struct(col("pri"), xxhash64(col("embedding")))).as("embedding"))
-    // The base corpus is covered by ivfIndexPath's corpusFingerprint,
-    // but the ARRIVALS are not — two different equal-sized arrival sets
+    // The base corpus is covered by the key's table state, but the
+    // ARRIVALS are not — two different equal-sized arrival sets
     // would otherwise share a key and the second refit would silently
     // serve (and then compact away) the first's index, losing vectors.
     // One order-independent content hash over the streamed rows closes
@@ -388,29 +357,10 @@ object Similarity {
         case r => r.getDecimal(0).toBigInteger.toString(16)
           .replace("-", "m")
       }
-    val n = Tables.parquetRowCount(spark, dir, "embeddings") +
-      streamed.count()
-    val path = ivfIndexPath(spark, dir, s"s03refit-a$arrivalsFp", nLists, n)
-    val freshBuild = !ivfExists(spark, path)
-    if (freshBuild) {
-      val stride = math.max(1L, n / 4096)
-      val fitSample = union
-        .filter(pmod(col("vec_id"), lit(stride)) === 0)
-        .select(array_to_vector(col("embedding")).as("features")).cache()
-      val model = try new KMeans().setK(nLists).setSeed(42).setMaxIter(5)
-        .fit(fitSample) finally fitSample.unpersist(false)
-      val assigned = model.transform(
-          union.withColumn("features", array_to_vector(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), col("prediction").as("list_id"))
-      val centDf = spark.createDataFrame(
-        model.clusterCenters.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-          (i, c.toArray.map(_.toFloat))
-        }).toDF("list_id", "centroid")
-      publishIndex(spark, path) { tmp =>
-        assigned.repartition(col("list_id")).write.parquet(tmp + "/assigned")
-        centDf.coalesce(1).write.parquet(tmp + "/centroids")
-      }
-    }
+    val (nBase, state) = Tables.parquetRowsAndState(spark, dir, "embeddings")
+    val n = nBase + streamed.count()
+    val path = indexPath(spark, dir, s"s03refit-a$arrivalsFp", nLists, n, state)
+    val index = ivfFit(spark, path, union, n, nLists)
     // Sweep SUPERSEDED refit generations for this corpus + nLists: each
     // refit's key embeds its arrival-set content hash, so an earlier
     // generation's path is unreachable once a newer refit absorbs more
@@ -419,7 +369,7 @@ object Similarity {
     // FULLY ANCHORED — family prefix, THIS dir tag (immediately
     // followed by the _n segment, so a sibling corpus whose sanitized
     // dir merely extends this one can never match), THIS nLists, and a
-    // terminal fingerprint (in-flight `.tmp-*` builds never match).
+    // terminal fingerprint (in-flight tmp builds never match).
     // Runs UNCONDITIONALLY (a crash between publish and sweep would
     // otherwise leak the old generation forever behind the cache hit),
     // in the caller's stream-quiet window (maybeRefit's contract) — but
@@ -451,8 +401,7 @@ object Similarity {
           .foreach(st => fs.delete(st.getPath, true))
       }
     }
-    (spark.read.parquet(path + "/assigned"),
-      spark.read.parquet(path + "/centroids"))
+    index
   }
 
   // ───────────── two-level coarse quantizer (distributed fit) ──────────
@@ -483,9 +432,8 @@ object Similarity {
   private[graft] def twoLevelIndex(spark: SparkSession, dir: String,
       nLists: Int, fitPerCell: Int = 1024): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir, "s03tl", nLists, n)
-    if (!ivfExists(spark, path)) {
+    val (path, n) = corpusIndex(spark, dir, "s03tl", nLists)
+    publishIndex(spark, path) { tmp =>
       val k1 = math.max(1, math.ceil(math.sqrt(nLists.toDouble)).toInt)
       val k2 = math.max(1, math.ceil(nLists.toDouble / k1).toInt)
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
@@ -541,11 +489,9 @@ object Similarity {
       val cellDf = spark.createDataFrame(
         l1cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
         .toDF("l1", "centroid")
-      publishIndex(spark, path) { tmp =>
-        assigned.repartition(col("list_id")).write.parquet(tmp + "/assigned")
-        centDf.coalesce(1).write.parquet(tmp + "/centroids")
-        cellDf.coalesce(1).write.parquet(tmp + "/cells")
-      }
+      assigned.repartition(col("list_id")).write.parquet(tmp + "/assigned")
+      centDf.coalesce(1).write.parquet(tmp + "/centroids")
+      cellDf.coalesce(1).write.parquet(tmp + "/cells")
     }
     (spark.read.parquet(path + "/assigned"),
       spark.read.parquet(path + "/centroids"),
@@ -664,8 +610,7 @@ object Similarity {
   private[graft] def pcaAxes(spark: SparkSession, dir: String,
       k: Int): (Array[Double], Seq[Array[Double]]) =
     pcaAxesCache.computeIfAbsent(
-      ivfIndexPath(spark, dir, "pcaaxes", k,
-        Tables.parquetRowCount(spark, dir, "embeddings")),
+      corpusIndex(spark, dir, "pcaaxes", k)._1,
       _ => pcaAxesFit(spark, dir, k))
 
   private def pcaAxesFit(spark: SparkSession, dir: String,
@@ -733,21 +678,18 @@ object Similarity {
     * result-identical to fresh fit (deterministic stride sample +
     * fixed-iteration spherical k-means; spec-pinned). */
   private[graft] def rangeIndexPersisted(spark: SparkSession, dir: String,
-      tag: String, e: DataFrame, n: Long,
+      tag: String, e: DataFrame,
       nLists: Int): (DataFrame, DataFrame, Seq[Array[Float]]) = {
-    val path = ivfIndexPath(spark, dir, tag, nLists, n)
-    if (!ivfExists(spark, path)) {
+    val (path, n) = corpusIndex(spark, dir, tag, nLists)
+    publishIndex(spark, path) { tmp =>
       val (assigned, stats, cents) = rangeIndexOf(e, n, nLists)
-      val centDf = spark.createDataFrame(
+      assigned.select(col("vec_id"), col("embedding"), col("cosines"),
+          col("best_cos"), col("list_id"))
+        .repartition(col("list_id")).write.parquet(tmp + "/assigned")
+      stats.coalesce(1).write.parquet(tmp + "/stats")
+      spark.createDataFrame(
         cents.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c) })
-        .toDF("list_id", "centroid")
-      publishIndex(spark, path) { tmp =>
-        assigned.select(col("vec_id"), col("embedding"), col("cosines"),
-            col("best_cos"), col("list_id"))
-          .repartition(col("list_id")).write.parquet(tmp + "/assigned")
-        stats.coalesce(1).write.parquet(tmp + "/stats")
-        centDf.coalesce(1).write.parquet(tmp + "/centroids")
-      }
+        .toDF("list_id", "centroid").coalesce(1).write.parquet(tmp + "/centroids")
       assigned.unpersist(false) // disk copy supersedes the build cache
     }
     val cents = spark.read.parquet(path + "/centroids")
@@ -1206,13 +1148,11 @@ object Similarity {
     * edge join, s26's isolation agg) scans contiguous edges. */
   private[graft] def s19GraphIndex(spark: SparkSession, dir: String,
       k: Int = 3): DataFrame = {
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir, "s19graph", k, n)
-    if (!ivfExists(spark, path))
-      publishIndex(spark, path) { tmp =>
-        s19KnnGraphFresh(spark, dir, k)
-          .repartition(col("query_id")).write.parquet(tmp + "/graph")
-      }
+    val (path, _) = corpusIndex(spark, dir, "s19graph", k)
+    publishIndex(spark, path) { tmp =>
+      s19KnnGraphFresh(spark, dir, k)
+        .repartition(col("query_id")).write.parquet(tmp + "/graph")
+    }
     spark.read.parquet(path + "/graph")
   }
 
@@ -1231,15 +1171,13 @@ object Similarity {
 
   def s19bGraphIndex(spark: SparkSession, dir: String, nLists: Int,
       nProbe: Int, rounds: Int): DataFrame = {
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir,
-      s"s19bgraph-l${nLists}p${nProbe}r$rounds", 3, n)
-    if (!ivfExists(spark, path))
-      publishIndex(spark, path) { tmp =>
-        val g = if (rounds == 0) s19bKnnGraphIvf(spark, dir, nLists, nProbe)
-          else s21GraphRefine(spark, dir, nLists, nProbe, rounds)
-        g.repartition(col("query_id")).write.parquet(tmp + "/graph")
-      }
+    val (path, _) = corpusIndex(spark, dir,
+      s"s19bgraph-l${nLists}p${nProbe}r$rounds", 3)
+    publishIndex(spark, path) { tmp =>
+      val g = if (rounds == 0) s19bKnnGraphIvf(spark, dir, nLists, nProbe)
+        else s21GraphRefine(spark, dir, nLists, nProbe, rounds)
+      g.repartition(col("query_id")).write.parquet(tmp + "/graph")
+    }
     spark.read.parquet(path + "/graph")
   }
 
@@ -1854,9 +1792,7 @@ object Similarity {
       nLists: Int): (DataFrame, DataFrame) = {
     val e = Tables.embeddings(spark, dir).filter(positiveNorm)
       .select(col("vec_id"), col("embedding"))
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val (assigned, stats, _) =
-      rangeIndexPersisted(spark, dir, "s06", e, n, nLists)
+    val (assigned, stats, _) = rangeIndexPersisted(spark, dir, "s06", e, nLists)
     (assigned, stats)
   }
 
@@ -2180,17 +2116,13 @@ object Similarity {
     * build/serve boundary). */
   private[graft] def s09Index(spark: SparkSession, dir: String, m: Int,
       k: Int): (DataFrame, IndexedSeq[Array[Array[Double]]], Int) = {
-    import spark.implicits._
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir, s"pq$m", k, n)
-    if (!ivfExists(spark, path)) {
+    val (path, _) = corpusIndex(spark, dir, s"pq$m", k)
+    publishIndex(spark, path) { tmp =>
       val (books, _) = pqCodebooks(spark, dir, m, k)
-      val codes = Tables.embeddings(spark, dir)
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"), pqEncodeNative(col("embedding"), books).as("codes"))
-      publishIndex(spark, path) { tmp =>
-        codes.write.parquet(tmp + "/codes")
-        booksDf(spark, books).coalesce(1).write.parquet(tmp + "/books")
-      }
+        .write.parquet(tmp + "/codes")
+      booksDf(spark, books).coalesce(1).write.parquet(tmp + "/books")
     }
     val books = booksFromPath(spark, path)
     (spark.read.parquet(path + "/codes"), books, books.head.head.length)
@@ -2264,17 +2196,13 @@ object Similarity {
     * assignment + one encode pass, then served forever. */
   private[graft] def s10Index(spark: SparkSession, dir: String, nLists: Int,
       m: Int, k: Int): (DataFrame, DataFrame, IndexedSeq[Array[Array[Double]]], Int) = {
-    val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    val path = ivfIndexPath(spark, dir, s"ivfpq${nLists}x$m", k, n)
+    val (path, _) = corpusIndex(spark, dir, s"ivfpq${nLists}x$m", k)
     val (assigned, centDf) = s03Index(spark, dir, nLists)
-    if (!ivfExists(spark, path)) {
+    publishIndex(spark, path) { tmp =>
       val (books, _) = pqCodebooks(spark, dir, m, k)
-      val apq = assigned.withColumn("codes",
-        pqEncodeNative(col("embedding"), books))
-      publishIndex(spark, path) { tmp =>
-        apq.repartition(col("list_id")).write.parquet(tmp + "/assigned")
-        booksDf(spark, books).coalesce(1).write.parquet(tmp + "/books")
-      }
+      assigned.withColumn("codes", pqEncodeNative(col("embedding"), books))
+        .repartition(col("list_id")).write.parquet(tmp + "/assigned")
+      booksDf(spark, books).coalesce(1).write.parquet(tmp + "/books")
     }
     val books = booksFromPath(spark, path)
     (spark.read.parquet(path + "/assigned"), centDf, books,

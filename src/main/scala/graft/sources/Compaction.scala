@@ -6,45 +6,25 @@ import org.apache.spark.sql.SparkSession
   * needs: streaming sinks and per-batch writers leave thousands of tiny
   * parquet files whose open/footer overhead dominates scans at scale.
   * Rewrites a parquet directory into ~`targetFileBytes` files by
-  * repartitioning on actual data size, atomically via write-to-temp +
-  * swap (a table format would make the swap transactional; the
-  * rewrite-and-redirect shape is the same). */
+  * repartitioning on actual data size, swapped in place through
+  * [[Commit.swap]] (a table format would make the swap transactional;
+  * the rewrite-and-redirect shape is the same). */
 object Compaction {
 
-  /** Returns (filesBefore, filesAfter). Every rename is checked and the
-    * backup is only discarded once the compacted copy is verifiably in
-    * place, so a failure at any step leaves either the original or the
-    * backup intact; stale tmp/bak leftovers from a crashed earlier run
-    * are cleared up front (a bak without a live dataset dir is first
-    * restored, not deleted). */
+  /** Returns (filesBefore, filesAfter). A crashed earlier run is
+    * recovered before the files are counted. */
   def compactParquet(spark: SparkSession, dir: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val path = new Path(dir)
+    val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + "_compact_tmp")
-    val bak = new Path(dir + "_compact_bak")
-    // Recover from a previous crashed run: a bak with no dataset dir means
-    // we died between the two renames — roll back. Stale tmp is garbage.
-    if (fs.exists(bak) && !fs.exists(path))
-      require(fs.rename(bak, path), s"failed to restore $bak -> $path")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
     def parquetFiles() = fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
-    val before = parquetFiles()
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(dir).repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(path, bak), s"failed to move $path aside to $bak")
-    if (!fs.rename(tmp, path)) {
-      // Roll back so the dataset stays readable at its original location.
-      fs.rename(bak, path)
-      throw new IllegalStateException(s"failed to swap $tmp into $path; original restored")
+    val before = Commit.swap(fs, path) { tmp =>
+      val files = parquetFiles()
+      val nOut = math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
+      spark.read.parquet(dir).repartition(nOut)
+        .write.mode("overwrite").parquet(tmp.toString)
+      files.length
     }
-    val after = parquetFiles()
-    require(after.nonEmpty, s"compacted $path is empty after swap; backup kept at $bak")
-    fs.delete(bak, true)
-    (before.length, after.length)
+    (before, parquetFiles().length)
   }
 }

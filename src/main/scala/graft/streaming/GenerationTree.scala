@@ -1,12 +1,14 @@
 package graft.streaming
 
+import graft.sources.Commit
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The at-rest GENERATION TREE shared by the durable ingest twins
   * (stream_incdedup's shingle index, stream_exactdedup's fingerprint
-  * set): `root/base` plus one `_SUCCESS`-committed `batch-<id>` dir per
-  * absorbed micro-batch — plus the COMPACTION those trees were missing:
+  * set): `root/base` plus one committed ([[graft.sources.Commit]])
+  * `batch-<id>` dir per absorbed micro-batch — plus the COMPACTION
+  * those trees were missing:
   * a year of minute-batches is ~500k directories, all listed (one
   * NameNode storm) and all footer-opened on EVERY probe. [[compact]]
   * folds committed generations into base so the tree stays a handful of
@@ -21,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   *    serves the one replay that can happen, content-compared exactly
   *    as before.
   *  - The fold writes base ∪ folded generations to a tmp dir CONTAINING
-  *    a `_horizon-<maxFoldedId>` marker file, then swaps it in (the
-  *    Compaction rename dance: tmp → swap with bak rollback) — data and
-  *    horizon publish atomically. Probes read the horizon and ignore
+  *    a `_horizon-<maxFoldedId>` marker file, then swaps it in
+  *    ([[graft.sources.Commit.swap]]) — data and horizon publish
+  *    atomically. Probes read the horizon and ignore
   *    any `batch-<id ≤ horizon>` dir, so a crash between the swap and
   *    the folded-dir deletes leaves DUPLICATE rows invisible rather
   *    than double-counted (d18's df arithmetic would corrupt
@@ -47,9 +49,6 @@ object GenerationTree {
     if (!name.startsWith(BatchPrefix)) None
     else scala.util.Try(name.stripPrefix(BatchPrefix).toLong).toOption
 
-  private def committed(fs: FileSystem, p: Path): Boolean =
-    fs.exists(new Path(p, "_SUCCESS"))
-
   /** Compaction horizon of the tree: every `batch-<id ≤ horizon>` is
     * folded into base (and any such dir still standing is a
     * crash-window leftover to ignore). −1 = never compacted. Read from
@@ -69,32 +68,27 @@ object GenerationTree {
     * batch's own prior attempt), ordered base-first then by id. */
   def liveGenerations(fs: FileSystem, root: Path,
       exclude: Option[String]): Seq[Path] = {
+    val base = new Path(root, "base")
+    (if (fs.exists(base)) Seq(base) else Seq.empty) ++
+      committedGenerations(fs, root).filterNot(p => exclude.contains(p.getName))
+  }
+
+  /** Committed post-horizon `batch-<id>` dirs, by id. */
+  private def committedGenerations(fs: FileSystem, root: Path): Seq[Path] = {
     if (!fs.exists(root)) return Seq.empty
     val h = horizon(fs, root)
     fs.listStatus(root).filter(_.isDirectory).map(_.getPath).toSeq
-      .filter { p =>
-        val n = p.getName
-        !exclude.contains(n) &&
-          (n == "base" ||
-            genId(n).exists(id => id > h && committed(fs, p)))
-      }
-      .sortBy(p => genId(p.getName).getOrElse(-1L))
+      .filter(p => genId(p.getName).exists(id => id > h && Commit.committed(fs, p)))
+      .sortBy(p => genId(p.getName).get)
   }
 
   /** Crash recovery for the compaction swap, callable from the PROBE
-    * path: a compact() that died between its two renames leaves `bak`
-    * standing and `base` missing — every probe would then see NO base
-    * (horizon −1, folded history invisible) and the restarted query's
-    * replay would wedge on a content-compare mismatch, while the fix
-    * lived only in compact(), unreachable past the throw. Both twins
-    * call this first in processBatch. Safe under the quiet-window
-    * contract (one query, sequential batches — no concurrent swap). */
-  def recover(fs: FileSystem, root: Path): Unit = {
-    val base = new Path(root, "base")
-    val bak = new Path(root, "base_compact_bak")
-    if (fs.exists(bak) && !fs.exists(base))
-      require(fs.rename(bak, base), s"failed to restore $bak -> $base")
-  }
+    * path: a fold that died between its two renames leaves base
+    * missing, so every probe would see no folded history and a replay
+    * would wedge on the collision compare. Every probe calls this
+    * first; safe under the quiet-window contract. */
+  def recover(fs: FileSystem, root: Path): Unit =
+    Commit.recover(fs, new Path(root, "base"))
 
   /** The collision guard's compacted half: an id at or below the
     * horizon cannot be a genuine replay, so it is a restarted query
@@ -112,119 +106,66 @@ object GenerationTree {
   }
 
   /** Committed post-horizon batch generations — the threshold signal. */
-  def committedBatchCount(fs: FileSystem, root: Path): Int = {
-    if (!fs.exists(root)) return 0
-    val h = horizon(fs, root)
-    fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .count(p => genId(p.getName).exists(id => id > h && committed(fs, p)))
-  }
+  def committedBatchCount(fs: FileSystem, root: Path): Int =
+    committedGenerations(fs, root).size
 
   /** Fold every committed generation except the newest `keepLatest`
     * into base. `dedupe` collapses duplicate rows in the folded base —
     * sound ONLY for set-semantics trees (stream_exactdedup's key set);
     * an occurrence-counting tree (stream_incdedup's shingle index, d18
-    * df arithmetic) must keep every row. Crash-safe at every step:
-    * leftover tmp/bak from a dead run is recovered first, the swap is
-    * rename-based with rollback, and folded-dir deletes run last (a
-    * crash there leaves leftovers the horizon already hides). Returns
-    * (foldedCount, newHorizon). */
+    * df arithmetic) must keep every row. Crash-safe at every step: the
+    * swap recovers a dead run first and rolls back on failure, and
+    * folded-dir deletes run last (a crash there leaves leftovers the
+    * horizon already hides). Returns (foldedCount, newHorizon). */
   def compact(spark: SparkSession, root: String, keepLatest: Int = 1,
       dedupe: Boolean = false): (Int, Long) = {
     require(keepLatest >= 1, "keepLatest must leave the replayable newest generation standing")
+    fold(spark, root, keepLatest, rows => if (dedupe) rows.distinct() else rows)
+  }
+
+  /** Retire the WHOLE tree behind an advanced horizon, keeping zero
+    * rows — for state that was absorbed into an EXTERNAL artifact
+    * (stream_vecindex's refit publishes base ∪ arrivals as a persisted
+    * index, so the tree's rows now live there; folding them into base
+    * would double-count the next refit). This is [[compact]]'s fold
+    * with every generation folded and no row kept: base becomes a
+    * SCHEMA-PRESERVING zero-row parquet plus the
+    * `_horizon-<maxRetiredId>` marker, so readers see an empty tree and
+    * the recycled-id refusal ([[requireAboveHorizon]]) SURVIVES the
+    * retirement. Quiet-window contract as [[compact]]; a genuinely
+    * in-flight batch replayed across a retirement also refuses — its
+    * rows are in the external artifact, so a loud wedge beats silent
+    * duplication. No-op when the tree holds no committed state. */
+  def retire(spark: SparkSession, root: String): (Int, Long) =
+    fold(spark, root, 0, _.limit(0).coalesce(1))
+
+  /** Rewrite base as `keep` of base ∪ every committed post-horizon
+    * generation but the newest `keepLatest`, behind the advanced
+    * horizon, then delete the folded generations. */
+  private def fold(spark: SparkSession, root: String, keepLatest: Int,
+      keep: DataFrame => DataFrame): (Int, Long) = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(rootP)) return (0, -1L)
     val base = new Path(rootP, "base")
-    val tmp = new Path(rootP, "base_compact_tmp")
-    val bak = new Path(rootP, "base_compact_bak")
-    // recover a run that died between the two renames; clear stale debris
     recover(fs, rootP)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
     val h = horizon(fs, rootP)
     // sweep folded leftovers (crash between a previous swap and its deletes)
     fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath)
       .filter(p => genId(p.getName).exists(_ <= h))
       .foreach(fs.delete(_, true))
-    val gens = fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath).toSeq
-      .filter(p => genId(p.getName).exists(id => id > h && committed(fs, p)))
-      .sortBy(p => genId(p.getName).get)
-    if (gens.size <= keepLatest) return (0, h)
-    val fold = gens.dropRight(keepLatest)
-    val newH = genId(fold.last.getName).get
-    val parts = (if (fs.exists(base)) Seq(base) else Seq.empty) ++ fold
-    val folded0 = parts.map(p => spark.read.parquet(p.toString))
-      .reduce(_ unionByName _)
-    val folded = if (dedupe) folded0.distinct() else folded0
-    folded.write.mode("overwrite").parquet(tmp.toString)
-    fs.create(new Path(tmp, s"_horizon-$newH"), true).close()
-    val hadBase = fs.exists(base)
-    if (hadBase)
-      require(fs.rename(base, bak), s"failed to move $base aside to $bak")
-    if (!fs.rename(tmp, base)) {
-      if (hadBase) fs.rename(bak, base)
-      throw new IllegalStateException(
-        s"failed to swap $tmp into $base; original restored")
+    val folded = committedGenerations(fs, rootP).dropRight(keepLatest)
+    val parts = (if (fs.exists(base)) Seq(base) else Seq.empty) ++ folded
+    // compact has nothing to do without a generation to fold; retire
+    // still empties a non-empty base
+    if (folded.isEmpty && (keepLatest > 0 || parts.isEmpty)) return (0, h)
+    val newH = folded.lastOption.flatMap(p => genId(p.getName)).getOrElse(h)
+    Commit.swap(fs, base) { tmp =>
+      keep(parts.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _))
+        .write.mode("overwrite").parquet(tmp.toString)
+      if (newH >= 0) fs.create(new Path(tmp, s"_horizon-$newH"), true).close()
     }
-    if (hadBase) fs.delete(bak, true)
-    fold.foreach(fs.delete(_, true))
-    (fold.size, newH)
-  }
-
-  /** Retire the WHOLE tree behind an advanced horizon, keeping zero
-    * rows — for state that was absorbed into an EXTERNAL artifact
-    * (stream_vecindex's refit publishes base ∪ arrivals through the
-    * persisted-index path, so the tree's rows now live there; folding
-    * them into base, [[compact]]'s move, would double-count the next
-    * refit). The new base is a SCHEMA-PRESERVING zero-row parquet plus
-    * the `_horizon-<maxRetiredId>` marker, published with the same
-    * tmp→swap→bak rename dance — so readers see an empty tree, and the
-    * recycled-id refusal ([[requireAboveHorizon]]) SURVIVES the
-    * retirement: a restarted query with a fresh checkpoint pointed at
-    * this tree refuses loudly instead of silently re-absorbing ids the
-    * external artifact already holds. (The pre-r12 version-dir scheme
-    * just deleted the consumed dirs — the same restart would overwrite
-    * history without a sound.) Quiet-window contract as [[compact]];
-    * a genuinely in-flight batch replayed across a retirement also
-    * refuses — its rows are in the external artifact, so a loud wedge
-    * (operator re-points the checkpoint) beats silent duplication.
-    * No-op when the tree holds no committed state. */
-  def retire(spark: SparkSession, root: String): (Int, Long) = {
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    val base = new Path(rootP, "base")
-    val tmp = new Path(rootP, "base_compact_tmp")
-    val bak = new Path(rootP, "base_compact_bak")
-    recover(fs, rootP)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    val h = horizon(fs, rootP)
-    if (!fs.exists(rootP)) return (0, h)
-    // sweep folded leftovers first (compact's rule)
-    fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath)
-      .filter(p => genId(p.getName).exists(_ <= h))
-      .foreach(fs.delete(_, true))
-    val gens = fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath).toSeq
-      .filter(p => genId(p.getName).exists(id => id > h && committed(fs, p)))
-      .sortBy(p => genId(p.getName).get)
-    val hadBase = fs.exists(base)
-    if (gens.isEmpty && !hadBase) return (0, h)
-    val newH = gens.lastOption.flatMap(p => genId(p.getName)).getOrElse(h)
-    val parts = (if (hadBase) Seq(base) else Seq.empty) ++ gens
-    parts.map(p => spark.read.parquet(p.toString))
-      .reduce(_ unionByName _)
-      .limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (newH >= 0)
-      fs.create(new Path(tmp, s"_horizon-$newH"), true).close()
-    if (hadBase)
-      require(fs.rename(base, bak), s"failed to move $base aside to $bak")
-    if (!fs.rename(tmp, base)) {
-      if (hadBase) fs.rename(bak, base)
-      throw new IllegalStateException(
-        s"failed to swap $tmp into $base; original restored")
-    }
-    if (hadBase) fs.delete(bak, true)
-    gens.foreach(fs.delete(_, true))
-    (gens.size, newH)
+    folded.foreach(fs.delete(_, true))
+    (folded.size, newH)
   }
 }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * reappear are treated as new. This twin owns the other half its doc
   * points at: CORPUS HISTORY. The fingerprint set lives at rest as
   * parquet (the stream_incdedup generation tree: `root/base` written
-  * once from the release's d01 keys, plus one `_SUCCESS`-committed
-  * `batch-<id>` dir per absorbed micro-batch), so a re-crawl of a
+  * once from the release's d01 keys, plus one committed `batch-<id>`
+  * dir per absorbed micro-batch), so a re-crawl of a
   * document absorbed months ago still flags, and a restarted query
   * resumes from the last committed generation with zero state-store
   * recovery.
@@ -76,29 +76,7 @@ object StreamExactDedup {
       .localCheckpoint(true) // materialize BEFORE the absorb mutates state
     val novel = verdicts.filter(col("verdict") === "novel")
       .select(col("dup_key")).distinct()
-    // A COMMITTED generation under this batch id is either (a) a
-    // genuine at-least-once replay — recomputed content is
-    // byte-identical, nothing to write — or (b) a BATCH-ID COLLISION:
-    // a restarted query with a fresh checkpoint (ids reset to 0)
-    // pointed at an existing tree. Overwriting in case (b) would
-    // silently destroy months of absorbed history, so compare content
-    // and refuse loudly on mismatch: durable state is never deleted on
-    // a guess. Uncommitted debris (no _SUCCESS) is always safe to drop.
-    if (fs.exists(own) && fs.exists(new Path(own, "_SUCCESS"))) {
-      val prior = spark.read.parquet(own.toString).select(col("dup_key"))
-      val differs = prior.exceptAll(novel).limit(1).count() > 0 ||
-        novel.exceptAll(prior).limit(1).count() > 0
-      require(!differs,
-        s"generation ${own.getName} is already committed with DIFFERENT " +
-          "content — batch-id collision (restarted query with a fresh " +
-          "checkpoint against an existing fingerprint tree?). Refusing " +
-          "to overwrite durable dedup history; point the restarted " +
-          "query at a fresh tree or keep its checkpoint.")
-      // identical content: idempotent replay, the commit already stands
-    } else {
-      if (fs.exists(own)) fs.delete(own, true) // uncommitted debris
-      novel.write.mode("overwrite").parquet(own.toString)
-    }
+    graft.sources.Commit.commitOrReplay(fs, own, novel)
     verdicts
   }
 

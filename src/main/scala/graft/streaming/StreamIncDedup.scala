@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `indexRoot/base` (written once by
   * [[graft.operators.Dedup.d18BuildIndex]]) plus one `batch-<id>` dir
   * per absorbed micro-batch. The probe reads base ∪ committed
-  * (`_SUCCESS`-marked) generations EXCLUDING the current batch id — a
+  * ([[graft.sources.Commit]]) generations EXCLUDING the current batch id — a
   * replayed batch never sees its own previous attempt, committed or
   * partial — and the absorb content-compares a COMMITTED leftover
   * under its id: identical means a genuine replay (the commit stands,
@@ -76,8 +76,8 @@ object StreamIncDedup {
     // replay — refuse the recycled id before touching anything
     GenerationTree.requireAboveHorizon(fs, root, batchId)
     // committed post-horizon generations only, never this batch's own
-    // prior attempt: a dir without _SUCCESS is a crashed append's debris
-    // (deleted below if it is ours; a concurrent writer's otherwise),
+    // prior attempt: an uncommitted dir is a crashed append's debris
+    // (replaced below if it is ours; a concurrent writer's otherwise),
     // and a dir at or below the horizon is a folded leftover whose rows
     // already live in base (reading it would double d18's df counts)
     val gens = GenerationTree.liveGenerations(fs, root, Some(own.getName))
@@ -87,34 +87,11 @@ object StreamIncDedup {
       .reduce(_ unionByName _)
     val pairs = Dedup.d18FromIndex(index, b, Dedup.NoDfCap, batchMaxDf)
       .localCheckpoint(true)
-    // A COMMITTED generation under this id is a genuine replay only if
-    // its content matches what this batch would absorb; otherwise it is
-    // a BATCH-ID COLLISION (restarted query, fresh checkpoint, ids back
-    // at 0, same tree) and overwriting would destroy absorbed history —
-    // refuse loudly instead (stream_exactdedup's rule). Uncommitted
-    // debris (no _SUCCESS) stays safe to drop.
-    if (fs.exists(own) && fs.exists(new Path(own, "_SUCCESS"))) {
-      // `replayVerified` = the caller (graft.Nightly) already ran this
-      // exact content comparison to pick the batch id — don't re-shingle
-      // the arrivals and re-run it (r12 ADVICE)
-      val differs = !replayVerified && {
-        val fresh = Dedup.dfCapped(Dedup.shingleIndexRows(b), "h", batchMaxDf)
-        val prior = spark.read.parquet(own.toString)
-          .select(fresh.columns.map(org.apache.spark.sql.functions.col): _*)
-        prior.exceptAll(fresh).limit(1).count() > 0 ||
-          fresh.exceptAll(prior).limit(1).count() > 0
-      }
-      require(!differs,
-        s"generation ${own.getName} is already committed with DIFFERENT " +
-          "content — batch-id collision (restarted query with a fresh " +
-          "checkpoint against an existing index tree?). Refusing to " +
-          "overwrite absorbed history; point the restarted query at a " +
-          "fresh tree or keep its checkpoint.")
-      // identical content: idempotent replay, the commit already stands
-    } else {
-      if (fs.exists(own)) fs.delete(own, true) // uncommitted debris
-      Dedup.d18AbsorbBatch(b, own.toString, batchMaxDf)
-    }
+    // the absorb: d18AbsorbBatch's rows, committed as this batch's
+    // generation or proved a replay. `replayVerified` = the caller
+    // (graft.Nightly) already proved own holds these rows.
+    if (!replayVerified) graft.sources.Commit.commitOrReplay(fs, own,
+      Dedup.dfCapped(Dedup.shingleIndexRows(b), "h", batchMaxDf))
     pairs
   }
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * single-sourcing rule applied to aggregation state).
   *
   * State lives as VERSIONED parquet (`v=<batchId>`), one version per
-  * micro-batch, committed by parquet's own _SUCCESS marker; readers pick
+  * micro-batch, committed by parquet's own commit marker; readers pick
   * the highest committed version. foreachBatch may replay a batch id
   * after a crash — the overwrite of the SAME version directory makes the
   * fold idempotent, so the state is exactly-once without a table format.
@@ -32,15 +32,15 @@ object StreamRollup {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** `v=<batchId>` subdirs with a parquet _SUCCESS marker — the one
-    * committed-version rule shared with [[StreamVecIndex]]. */
+  /** `v=<batchId>` subdirs that are committed
+    * ([[graft.sources.Commit.committed]]). */
   private[streaming] def committedVersions(spark: SparkSession, dir: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val f = fs(spark, dir)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(s => f.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+      .filter(s => graft.sources.Commit.committed(f, s.getPath))
       .map(_.getPath.getName.stripPrefix("v=").toLong)
   }
 

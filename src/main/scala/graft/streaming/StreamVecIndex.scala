@@ -19,17 +19,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * same lists batch processing would put them in (spec-pinned against a
   * driver recompute).
   *
-  * At-rest state is a [[GenerationTree]] (round 12 — one audited
-  * mechanism instead of two): each micro-batch commits a `batch-<id>`
-  * generation; readers union base + committed post-horizon generations;
+  * At-rest state is a [[GenerationTree]]: each micro-batch commits a
+  * `batch-<id>` generation ([[graft.sources.Commit.commitOrReplay]]);
+  * readers union base + committed post-horizon generations;
   * generations past `maxGenerations` fold into base ([[GenerationTree
   * .compact]], dedupe OFF — rows are per-vector facts that must all
-  * survive). The previous `v=<batchId>` same-version-overwrite scheme
-  * was replay-idempotent but UNGUARDED against the batch-id collision
-  * (a restarted query with a fresh checkpoint, ids back at 0, pointed
-  * at an existing tree silently OVERWROTE absorbed vectors); the tree's
-  * content-compare + horizon manifest refuse that loudly, and the
-  * assignment's determinism makes the genuine-replay compare exact.
+  * survive). A restarted query with a fresh checkpoint (ids back at 0)
+  * pointed at an existing tree must not overwrite absorbed vectors:
+  * the same-rows compare and the horizon manifest refuse that loudly,
+  * and the assignment's determinism makes the genuine-replay compare
+  * exact.
   * After a refit absorbs the tree into the published index, the tree is
   * [[GenerationTree.retire]]d — emptied BEHIND the advanced horizon, so
   * the recycled-id refusal survives retirement. The drift signal that
@@ -78,25 +77,9 @@ object StreamVecIndex {
     val assigned = batch.select(col("vec_id"), col("embedding"),
         listIdOf(col("embedding"), cents).as("list_id"))
       .repartition(col("list_id"))
-    if (fs.exists(own) &&
-        fs.exists(new org.apache.hadoop.fs.Path(own, "_SUCCESS"))) {
-      // assignment is deterministic, so a genuine replay reproduces the
-      // committed generation EXACTLY; different content is the
-      // restarted-query id collision — refuse, never overwrite
-      val prior = spark.read.parquet(own.toString)
-        .select(assigned.columns.map(col): _*)
-      val differs = prior.exceptAll(assigned).limit(1).count() > 0 ||
-        assigned.exceptAll(prior).limit(1).count() > 0
-      require(!differs,
-        s"generation ${own.getName} is already committed with DIFFERENT " +
-          "content — batch-id collision (restarted query with a fresh " +
-          "checkpoint against an existing vector-index tree?). Refusing " +
-          "to overwrite absorbed vectors; point the restarted query at " +
-          "a fresh tree or keep its checkpoint.")
-    } else {
-      if (fs.exists(own)) fs.delete(own, true) // uncommitted debris
-      assigned.write.mode("overwrite").parquet(own.toString)
-    }
+    // assignment is deterministic, so a genuine replay reproduces the
+    // committed generation exactly
+    graft.sources.Commit.commitOrReplay(fs, own, assigned)
   }
 
   /** Start maintaining `indexDir` from a stream of (vec_id: long,
@@ -123,13 +106,13 @@ object StreamVecIndex {
       }
       .start()
 
-  /** Upgrade guard: an index dir written by the pre-r12 `v=<batchId>`
+  /** Upgrade guard: an index dir written by the older `v=<batchId>`
     * version-dir scheme would read as EMPTY under the generation tree
     * (liveGenerations matches only `base`/`batch-<id>`) — absorbed
     * vectors silently vanishing is exactly the failure mode the tree
     * exists to prevent, so refuse loudly with the migration recipe
     * instead. The migration is a pure rename: `v=<id>` → `batch-<id>`
-    * (contents and `_SUCCESS` markers are already in the tree's
+    * (contents and commit markers are already in the tree's
     * at-rest shape). */
   private def refuseLegacyVersionDirs(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Unit = {
