@@ -4,6 +4,7 @@ import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -16,13 +17,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * (IngestTest.java:112): `<pri> … {SET}[USERn]: EVENT: proto p …`.
   *
   * `spark.read.format("graft-cdr").load(dir)` yields structured rows
-  * (pri, cdr_set, user_id, event, proto, line) straight off raw `.log` /
-  * `.log.gz` files — the scan parallelizes per file (one InputPartition
-  * each; a production variant would extend FileFormat for intra-file
-  * splits of uncompressed files), gzip is decoded per partition, and
-  * unparseable lines surface with null fields rather than failing the
-  * scan. Demonstrates the V2 read path end-to-end: TableProvider →
-  * Table → ScanBuilder → Batch → PartitionReaderFactory. */
+  * (pri, cdr_set, user_id, event, proto, line) straight off the raw
+  * files of `dir`, plain or `.gz`. Names starting with `_` or `.`
+  * (`_SUCCESS`, hidden files) are skipped, as Spark's file sources
+  * skip them. Uncompressed files split by byte range, gzip files are
+  * one partition each.
+  *
+  * Each line's groups are those of [[CdrTable.LinePattern]]. A line of
+  * ASCII bytes is parsed straight from its bytes into one row the
+  * reader reuses for every line; any other line (a byte ≥ 0x80) is
+  * decoded and matched against `LinePattern` itself, so that is the
+  * only path for non-ASCII input. A line that does not match, or whose
+  * `pri`, `user_id` or `proto` overflows its Int/Long column, comes
+  * back with all five parsed fields null; the scan never fails on a
+  * line. Only the projected columns are built: `line` is copied only
+  * when selected, and a count parses nothing. */
 class CdrDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cdr"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = CdrTable.Schema
@@ -95,7 +104,12 @@ class CdrScan(path: String, hadoopConf: org.apache.hadoop.conf.Configuration,
   override def planInputPartitions(): Array[InputPartition] = {
     val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(hadoopConf)
-    fs.listStatus(hadoopPath).filter(_.isFile).sortBy(_.getPath.toString)
+    fs.listStatus(hadoopPath)
+      .filter { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      .sortBy(_.getPath.toString)
       .flatMap { st =>
         val f = st.getPath.toString
         if (f.endsWith(".gz") || st.getLen <= splitBytes)
@@ -123,19 +137,20 @@ class CdrReaderFactory(conf: SerializableHadoopConf, fields: Array[String])
   * that doesn't start at 0 discards its first (possibly partial) line —
   * the previous split reads one line PAST its end — so a line whose
   * first byte is at position s belongs to the unique split with
-  * start < s ≤ end (plus s = 0 to the first split). */
+  * start < s ≤ end (plus s = 0 to the first split). `get()` returns the
+  * same row after every `next()`; the strings in it are fresh copies. */
 class CdrPartitionReader(part: CdrInputPartition, conf: SerializableHadoopConf,
     fields: Array[String] = CdrTable.Schema.fieldNames)
     extends PartitionReader[InternalRow] {
   import org.apache.hadoop.io.Text
   import org.apache.hadoop.util.LineReader
 
-  // Column pruning: the regex parse only runs when a parsed field is in
-  // the pruned schema — a lines-only projection (grep/count shapes) is a
-  // pure decompress-and-split scan.
-  private val needsParse = fields.exists(_ != "line")
-  private val fieldIdx: Array[Int] =
-    fields.map(f => CdrTable.Schema.fieldNames.indexOf(f))
+  // The output ordinal of each schema column, -1 when pruned away.
+  private val Array(oPri, oSet, oUser, oEvent, oProto, oLine) =
+    CdrTable.Schema.fieldNames.map(f => fields.indexOf(f))
+  private val parsedOrds = Array(oPri, oSet, oUser, oEvent, oProto).filter(_ >= 0)
+  private val row = new GenericInternalRow(fields.length)
+  private val scanner = new CdrLineScanner
 
   private val hadoopPath = new Path(part.file)
   private val fs = hadoopPath.getFileSystem(conf.value)
@@ -148,30 +163,152 @@ class CdrPartitionReader(part: CdrInputPartition, conf: SerializableHadoopConf,
   private val text = new Text()
   private var pos: Long = part.start
   if (!gz && part.start != 0) pos += reader.readLine(text) // discard partial first line
-  private var current: InternalRow = _
 
   override def next(): Boolean = {
     if (!gz && pos > end) return false
     val n = reader.readLine(text)
-    if (n == 0) { current = null; false }
+    if (n == 0) false
     else {
       pos += n
-      val line = text.toString
-      val slots = new Array[Any](6)
-      slots(5) = UTF8String.fromString(line)
-      if (needsParse) line match {
-        case CdrTable.LinePattern(pri, set, user, event, proto) =>
-          slots(0) = pri.toInt
-          slots(1) = UTF8String.fromString(set)
-          slots(2) = user.toLong
-          slots(3) = UTF8String.fromString(event)
-          slots(4) = proto.toInt
-        case _ => ()
-      }
-      current = InternalRow.fromSeq(fieldIdx.toSeq.map(slots))
+      if (fields.nonEmpty) fill(text.getBytes, text.getLength)
       true
     }
   }
-  override def get(): InternalRow = current
+
+  private def fill(b: Array[Byte], len: Int): Unit =
+    if (CdrLineScanner.plain(b, len)) {
+      if (parsedOrds.nonEmpty) {
+        if (scanner.scan(b, len)) {
+          if (oPri >= 0) row.setInt(oPri, scanner.pri)
+          if (oSet >= 0) row.update(oSet, copy(b, scanner.setFrom, scanner.setTo))
+          if (oUser >= 0) row.setLong(oUser, scanner.user)
+          if (oEvent >= 0) row.update(oEvent, copy(b, scanner.eventFrom, scanner.eventTo))
+          if (oProto >= 0) row.setInt(oProto, scanner.proto)
+        } else parsedOrds.foreach(row.setNullAt)
+      }
+      if (oLine >= 0) row.update(oLine, copy(b, 0, len))
+    } else {
+      val line = text.toString
+      val groups = line match {
+        case CdrTable.LinePattern(pri, set, user, event, proto) =>
+          for (p <- pri.toIntOption; u <- user.toLongOption; pr <- proto.toIntOption)
+            yield (p, set, u, event, pr)
+        case _ => None
+      }
+      groups match {
+        case Some((pri, set, user, event, proto)) =>
+          if (oPri >= 0) row.setInt(oPri, pri)
+          if (oSet >= 0) row.update(oSet, UTF8String.fromString(set))
+          if (oUser >= 0) row.setLong(oUser, user)
+          if (oEvent >= 0) row.update(oEvent, UTF8String.fromString(event))
+          if (oProto >= 0) row.setInt(oProto, proto)
+        case None => parsedOrds.foreach(row.setNullAt)
+      }
+      if (oLine >= 0) row.update(oLine, UTF8String.fromString(line))
+    }
+
+  private def copy(b: Array[Byte], from: Int, to: Int): UTF8String =
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, from, to))
+
+  override def get(): InternalRow = row
   override def close(): Unit = reader.close()
+}
+
+private[graft] object CdrLineScanner {
+  /** True when every byte is ASCII other than CR and LF: the lines
+    * [[CdrLineScanner.scan]] parses exactly as `LinePattern` does. */
+  def plain(b: Array[Byte], len: Int): Boolean = {
+    var i = 0
+    while (i < len) {
+      val c = b(i)
+      if (c < 0 || c == '\n' || c == '\r') return false
+      i += 1
+    }
+    true
+  }
+
+  private val UserTag = "[USER".getBytes("US-ASCII")
+  private val ProtoTag = "proto ".getBytes("US-ASCII")
+}
+
+/** [[CdrTable.LinePattern]] as a byte scan, for lines that pass
+  * [[CdrLineScanner.plain]]. On those, `.` matches every byte and `\s`
+  * is space or 0x09-0x0D, and each group but the set is a maximal run
+  * of its class, so the only choice the regex makes is which `{` its
+  * greedy `.*` stops at: the rightmost one whose suffix matches. After
+  * `scan` returns true the fields hold the groups, numbers already
+  * converted; a match whose number overflows its column returns false. */
+private[graft] final class CdrLineScanner {
+  import CdrLineScanner._
+
+  var pri = 0
+  var user = 0L
+  var proto = 0
+  var setFrom, setTo, eventFrom, eventTo = 0
+  private var userFrom, userTo, protoFrom, protoTo = 0
+
+  def scan(b: Array[Byte], len: Int): Boolean = {
+    if (len == 0 || b(0) != '<') return false
+    val priEnd = digits(b, 1, len)
+    if (priEnd == 1 || priEnd == len || b(priEnd) != '>') return false
+    var k = len - 1
+    while (k > priEnd && !(b(k) == '{' && suffix(b, k, len))) k -= 1
+    if (k == priEnd) return false
+    val p = number(b, 1, priEnd, Int.MaxValue)
+    val u = number(b, userFrom, userTo, Long.MaxValue)
+    val pr = number(b, protoFrom, protoTo, Int.MaxValue)
+    if (p < 0 || u < 0 || pr < 0) return false
+    pri = p.toInt; user = u; proto = pr.toInt
+    true
+  }
+
+  /** `\{([^}]*)\}\[USER(\d+)\]:\s*([A-Z0-9]+):\s*proto (\d+)` at `k`. */
+  private def suffix(b: Array[Byte], k: Int, len: Int): Boolean = {
+    var i = k + 1
+    while (i < len && b(i) != '}') i += 1
+    if (i == len) return false
+    setFrom = k + 1; setTo = i
+    i += 1
+    if (!tag(b, i, len, UserTag)) return false
+    userFrom = i + UserTag.length; userTo = digits(b, userFrom, len)
+    i = userTo
+    if (i == userFrom || i + 1 >= len || b(i) != ']' || b(i + 1) != ':') return false
+    eventFrom = spaces(b, i + 2, len)
+    i = eventFrom
+    while (i < len && ((b(i) >= 'A' && b(i) <= 'Z') || (b(i) >= '0' && b(i) <= '9'))) i += 1
+    eventTo = i
+    if (i == eventFrom || i == len || b(i) != ':') return false
+    i = spaces(b, i + 1, len)
+    if (!tag(b, i, len, ProtoTag)) return false
+    protoFrom = i + ProtoTag.length; protoTo = digits(b, protoFrom, len)
+    protoTo > protoFrom
+  }
+
+  private def digits(b: Array[Byte], from: Int, len: Int): Int = {
+    var i = from
+    while (i < len && b(i) >= '0' && b(i) <= '9') i += 1
+    i
+  }
+
+  private def spaces(b: Array[Byte], from: Int, len: Int): Int = {
+    var i = from
+    while (i < len && (b(i) == ' ' || (b(i) >= 9 && b(i) <= 13))) i += 1
+    i
+  }
+
+  private def tag(b: Array[Byte], from: Int, len: Int, t: Array[Byte]): Boolean =
+    from + t.length <= len && java.util.Arrays.equals(b, from, from + t.length, t, 0, t.length)
+
+  /** The decimal digits `b(from until to)`, or -1 past `max`. */
+  private def number(b: Array[Byte], from: Int, to: Int, max: Long): Long = {
+    var v = 0L
+    var i = from
+    while (i < to) {
+      val d = b(i) - '0'
+      if (v > (max - d) / 10) return -1
+      v = v * 10 + d
+      i += 1
+    }
+    v
+  }
 }

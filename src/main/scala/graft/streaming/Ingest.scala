@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -26,13 +26,16 @@ object Ingest {
 
   /** Batch ingest: text (plain or .gz — codec inferred per file) →
     * compressed parquet, tagged with the source file. Returns rows
-    * ingested. */
+    * ingested, counted by the write itself through `observe`, so no
+    * job reads the output back. */
   def ingestText(spark: SparkSession, inPath: String, outPath: String,
       compression: String = "snappy"): Long = {
+    val written = Observation()
     spark.read.text(inPath)
       .select(col("value").as("line"), input_file_name().as("src_file"))
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").option("compression", compression).parquet(outPath)
-    spark.read.parquet(outPath).count()
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Streaming ingest (tail-f): watch a directory for new text files,

@@ -74,6 +74,38 @@ class CdrSourceSpec extends GraftSuite {
       (0 until 50).map(_ % 7).sum)
   }
 
+  test("graft-cdr skips _- and .-prefixed files as spark.read.text does") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdrhidden").toString
+    def write(name: String, lines: String*): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name"), lines.mkString("\n").getBytes)
+    write("a.log", cdrLine(1), cdrLine(2))
+    write("_SUCCESS", cdrLine(3))
+    write(".hidden", cdrLine(4))
+    val df = spark.read.format("graft-cdr").load(dir)
+    assert(df.count() == 2)
+    assert(spark.read.text(dir).count() == 2)
+    assert(df.select("user_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(101L, 102L))
+  }
+
+  test("graft-cdr leaves a line unparsed when a number overflows its column") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdrovf").toString
+    // the last two go through the decode-and-regex path (non-ASCII bytes)
+    val overflow = Seq(
+      "<99999999999> {S}[USER1]: EV: proto 1",
+      "<2147483648> {S}[USER1]: EV: proto 1",
+      "<1> {S}[USER9223372036854775808]: EV: proto 1",
+      "<1> {S}[USER1]: EV: proto 2147483648",
+      "<1> {S\u00e9}[USER1]: EV: proto 99999999999",
+      "<99999999999> {S}[USER1]: EV: proto 1 \u00e9")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.log"),
+      (overflow :+ "<2147483647> {S}[USER9223372036854775807]: EV: proto 2147483647")
+        .mkString("\n").getBytes("UTF-8"))
+    val rows = spark.read.format("graft-cdr").load(dir).collect()
+    assert(rows.length == 7)
+    rows.take(6).foreach(r => assert((0 until 5).forall(r.isNullAt), s"parsed: $r"))
+    assert(rows(6).toSeq.take(5) == Seq(Int.MaxValue, "S", Long.MaxValue, "EV", Int.MaxValue))
+  }
+
   test("graft-cdr propagates session hadoop conf to executor-side readers") {
     import graft.sources.cdr.SerializableHadoopConf
     // Round-trip: spark.hadoop.* session settings survive Java serialization

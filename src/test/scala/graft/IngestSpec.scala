@@ -4,6 +4,7 @@ import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.util.zip.GZIPOutputStream
 import graft.sources.{FsIO, SeqFile}
 import graft.streaming.Ingest
+import org.apache.spark.TestBus
 
 class IngestSpec extends GraftSuite {
 
@@ -60,6 +61,30 @@ class IngestSpec extends GraftSuite {
     val back = spark.read.parquet(s"$dir/out")
     assert(back.columns.toSet == Set("line", "src_file"))
     assert(back.select("src_file").distinct().count() == 2)
+  }
+
+  test("batch ingest counts rows from its own write: one job, no read-back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in/a.log"),
+      (1 to 321).map(i => s"<13> host rec $i").mkString("\n").getBytes)
+    val (n, jobs) = TestBus.jobsDuring(spark.sparkContext)(
+      Ingest.ingestText(spark, s"$dir/in", s"$dir/out"))
+    assert(n == 321)
+    assert(jobs == 1, s"ingest submitted $jobs jobs; the write is the only one")
+    assert(spark.read.parquet(s"$dir/out").count() == 321)
+  }
+
+  test("batch ingest of empty files returns 0 instead of waiting on the count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_empty").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    Seq("a.log", "b.log").foreach(f =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/in/$f"), Array.emptyByteArray))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val n = Await.result(Future(Ingest.ingestText(spark, s"$dir/in", s"$dir/out")), 2.minutes)
+    assert(n == 0)
   }
 
   test("fs round-trip preserves rows for every format") {

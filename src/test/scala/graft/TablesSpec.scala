@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -13,22 +11,7 @@ class TablesSpec extends GraftSuite {
 
   private def newDir(): String = Files.createTempDirectory("graft-tables").toString
 
-  /** The Spark jobs submitted while `body` runs, counted by a listener
-    * over a drained bus. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    TestBus.drain(sc)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      TestBus.drain(sc)
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) = TestBus.jobsDuring(spark.sparkContext)(body)
 
   test("a second load of an unchanged table submits no Spark job") {
     val dir = newDir()
