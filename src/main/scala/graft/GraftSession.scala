@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one constructor of a graft SparkSession. Every main and the spec
-  * base build their session here, so the gate, the specs and the bench
-  * plan with the same engine conf set. The measurements behind each
-  * entry are in DEPLOY.md, "Session configuration". */
+  * base build their session here, so the gate, the specs and graft's
+  * own mains plan with the same engine conf set; graftbench builds its
+  * session itself, with a copy of these confs. The measurements behind
+  * each entry are in DEPLOY.md, "Session configuration". */
 object GraftSession {
   /** `local[cpus]` with the engine confs, then the caller's `confs`, then
     * the `SPARK_GRAFT_CONF` overlay ([[ToolConf]]) last, so an experiment

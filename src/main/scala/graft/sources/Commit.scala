@@ -90,7 +90,10 @@ object Commit {
     * moves aside to `<dst>_compact_bak`, tmp renames into place, and bak
     * is dropped only once the new `dst` is committed. Every rename is
     * checked: a failure leaves either the original at `dst` or names
-    * the bak that holds it. */
+    * the bak that holds it. A [[recover]] from another reader between
+    * the two renames puts the bak back at `dst`, and a local file
+    * system then nests tmp inside it instead of failing the rename;
+    * the swap checks where tmp landed and fails naming that race. */
   def swap[T](fs: FileSystem, dst: Path)(write: Path => T): T = {
     val tmp = sibling(dst, "_compact_tmp")
     val bak = sibling(dst, "_compact_bak")
@@ -105,6 +108,13 @@ object Commit {
       if (hadDst && fs.rename(bak, dst))
         throw new IllegalStateException(s"failed to swap $tmp into $dst; original restored")
       throw new IllegalStateException(s"failed to swap $tmp into $dst$kept")
+    }
+    val nested = new Path(dst, tmp.getName)
+    if (fs.exists(tmp) || fs.exists(nested)) {
+      fs.delete(nested, true)
+      throw new IllegalStateException(s"failed to swap $tmp into $dst: a concurrent " +
+        s"recover restored $dst from $bak between the two renames, so the rename " +
+        s"did not replace it; a copy nested inside it is removed and $dst holds the original")
     }
     if (!committed(fs, dst))
       throw new IllegalStateException(s"swapped-in $dst holds no $Marker$kept")

@@ -3,11 +3,16 @@ package graft.sources.cdr
 import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -21,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * files of `dir`, plain or `.gz`. Names starting with `_` or `.`
   * (`_SUCCESS`, hidden files) are skipped, as Spark's file sources
   * skip them. Uncompressed files split by byte range, gzip files are
-  * one partition each.
+  * read whole, and small files and ranges pack into one task as
+  * `spark.read.text` packs them ([[CdrScan]]).
   *
   * Each line's groups are those of [[CdrTable.LinePattern]]. A line of
   * ASCII bytes is parsed straight from its bytes into one row the
@@ -78,72 +84,102 @@ class CdrTable(path: String) extends Table with SupportsRead {
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val splitBytes = options.getLong("splitBytes", 128L * 1024 * 1024)
+    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var pruned: StructType = CdrTable.Schema
       override def pruneColumns(requiredSchema: StructType): Unit =
         pruned = requiredSchema
-      override def build(): Scan = new CdrScan(path,
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf(),
-        splitBytes, pruned)
+      override def build(): Scan =
+        new CdrScan(SparkSession.active, path, splitBytes, pruned)
     }
   }
 }
 
-/** Plans one InputPartition per `splitBytes` byte range of each
-  * uncompressed file (gzip streams are unsplittable → whole-file
-  * partitions), so a single multi-GB log fans out across executors the
-  * way the reference's HDFS-block-parallel MapReduce jobs did. Range
-  * boundaries use the TextInputFormat line-assignment rule (see
-  * [[CdrPartitionReader]]), so every line lands in exactly one split. */
-class CdrScan(path: String, hadoopConf: org.apache.hadoop.conf.Configuration,
-    splitBytes: Long, prunedSchema: StructType = CdrTable.Schema)
+/** Plans the scan as `spark.read.text` plans a file scan: each
+  * uncompressed file is cut into byte ranges of at most the split size
+  * (gzip streams are unsplittable, so read whole), and the ranges,
+  * largest first, are packed into partitions by
+  * `FilePartition.getFilePartitions`, each range also charged
+  * `spark.sql.files.openCostInBytes`. The split size is the
+  * `splitBytes` option, or else Spark's own `FilePartition.maxSplitBytes`
+  * from `maxPartitionBytes`, the open cost and the default parallelism.
+  * A multi-GB log so fans out across executors the way the reference's
+  * HDFS-block-parallel MapReduce jobs did, and a directory of small
+  * files is a few tasks rather than one per file. Range boundaries use
+  * the TextInputFormat line-assignment rule (see [[CdrLineRange]]), so
+  * every line lands in exactly one range. */
+class CdrScan(spark: SparkSession, path: String, splitBytes: Option[Long],
+    prunedSchema: StructType = CdrTable.Schema)
     extends Scan with Batch {
+  private val hadoopConf = spark.sessionState.newHadoopConf()
   override def readSchema(): StructType = prunedSchema
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     val hadoopPath = new Path(path)
-    val fs = hadoopPath.getFileSystem(hadoopConf)
-    fs.listStatus(hadoopPath)
+    val files = hadoopPath.getFileSystem(hadoopConf).listStatus(hadoopPath)
       .filter { st =>
         val name = st.getPath.getName
         st.isFile && !name.startsWith("_") && !name.startsWith(".")
       }
       .sortBy(_.getPath.toString)
-      .flatMap { st =>
-        val f = st.getPath.toString
-        if (f.endsWith(".gz") || st.getLen <= splitBytes)
-          Seq(CdrInputPartition(f, 0L, st.getLen))
-        else
-          (0L until st.getLen by splitBytes).map(off =>
-            CdrInputPartition(f, off, math.min(splitBytes, st.getLen - off)))
-      }.map(p => p: InputPartition).toArray
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val split = splitBytes.getOrElse(
+      FilePartition.maxSplitBytes(spark, files.map(_.getLen + openCost).sum))
+    val ranges = files.toSeq.flatMap { st =>
+      val f = SparkPath.fromPath(st.getPath)
+      if (st.getPath.getName.endsWith(".gz") || st.getLen <= split)
+        Seq(PartitionedFile(InternalRow.empty, f, 0L, st.getLen))
+      else
+        (0L until st.getLen by split).map(off =>
+          PartitionedFile(InternalRow.empty, f, off, math.min(split, st.getLen - off)))
+    }
+    FilePartition.getFilePartitions(spark, ranges.sortBy(-_.length), split).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new CdrReaderFactory(new SerializableHadoopConf(hadoopConf),
       prunedSchema.fieldNames)
 }
 
-case class CdrInputPartition(file: String, start: Long, length: Long)
-    extends InputPartition
-
 class CdrReaderFactory(conf: SerializableHadoopConf, fields: Array[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CdrPartitionReader(partition.asInstanceOf[CdrInputPartition], conf, fields)
+    new CdrPartitionReader(partition.asInstanceOf[FilePartition].files, conf, fields)
 }
 
-/** Byte-range line reader with TextInputFormat split semantics: a split
-  * that doesn't start at 0 discards its first (possibly partial) line —
-  * the previous split reads one line PAST its end — so a line whose
-  * first byte is at position s belongs to the unique split with
-  * start < s ≤ end (plus s = 0 to the first split). `get()` returns the
-  * same row after every `next()`; the strings in it are fresh copies. */
-class CdrPartitionReader(part: CdrInputPartition, conf: SerializableHadoopConf,
+/** The lines of one byte range with TextInputFormat split semantics: a
+  * range that doesn't start at 0 discards its first (possibly partial)
+  * line — the previous range reads one line PAST its end — so a line
+  * whose first byte is at position s belongs to the unique range with
+  * start < s ≤ end (plus s = 0 to the first range). Each line is read
+  * into `text`. */
+private final class CdrLineRange(range: PartitionedFile,
+    conf: org.apache.hadoop.conf.Configuration, text: Text) {
+  private val path = range.toPath
+  private val raw = path.getFileSystem(conf).open(path)
+  private val gz = path.getName.endsWith(".gz")
+  private val reader: LineReader =
+    if (gz) new LineReader(new GZIPInputStream(raw))
+    else { raw.seek(range.start); new LineReader(raw) }
+  private val end: Long = range.start + range.length
+  private var pos: Long = range.start
+  if (!gz && range.start != 0) pos += reader.readLine(text) // discard partial first line
+
+  def next(): Boolean = {
+    if (!gz && pos > end) return false
+    val n = reader.readLine(text)
+    pos += n
+    n > 0
+  }
+
+  def close(): Unit = reader.close()
+}
+
+/** Reads the ranges of one packed partition in turn ([[CdrLineRange]]).
+  * `get()` returns the same row after every `next()`; the strings in it
+  * are fresh copies. */
+class CdrPartitionReader(ranges: Array[PartitionedFile], conf: SerializableHadoopConf,
     fields: Array[String] = CdrTable.Schema.fieldNames)
     extends PartitionReader[InternalRow] {
-  import org.apache.hadoop.io.Text
-  import org.apache.hadoop.util.LineReader
 
   // The output ordinal of each schema column, -1 when pruned away.
   private val Array(oPri, oSet, oUser, oEvent, oProto, oLine) =
@@ -151,28 +187,21 @@ class CdrPartitionReader(part: CdrInputPartition, conf: SerializableHadoopConf,
   private val parsedOrds = Array(oPri, oSet, oUser, oEvent, oProto).filter(_ >= 0)
   private val row = new GenericInternalRow(fields.length)
   private val scanner = new CdrLineScanner
-
-  private val hadoopPath = new Path(part.file)
-  private val fs = hadoopPath.getFileSystem(conf.value)
-  private val raw = fs.open(hadoopPath)
-  private val gz = part.file.endsWith(".gz")
-  private val reader: LineReader =
-    if (gz) new LineReader(new GZIPInputStream(raw))
-    else { raw.seek(part.start); new LineReader(raw) }
-  private val end: Long = part.start + part.length
   private val text = new Text()
-  private var pos: Long = part.start
-  if (!gz && part.start != 0) pos += reader.readLine(text) // discard partial first line
+  private val pending = ranges.iterator
+  private var lines: CdrLineRange = null
 
   override def next(): Boolean = {
-    if (!gz && pos > end) return false
-    val n = reader.readLine(text)
-    if (n == 0) false
-    else {
-      pos += n
-      if (fields.nonEmpty) fill(text.getBytes, text.getLength)
-      true
+    while (lines != null || pending.hasNext) {
+      if (lines == null) lines = new CdrLineRange(pending.next(), conf.value, text)
+      if (lines.next()) {
+        if (fields.nonEmpty) fill(text.getBytes, text.getLength)
+        return true
+      }
+      lines.close()
+      lines = null
     }
+    false
   }
 
   private def fill(b: Array[Byte], len: Int): Unit =
@@ -211,7 +240,7 @@ class CdrPartitionReader(part: CdrInputPartition, conf: SerializableHadoopConf,
     UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, from, to))
 
   override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (lines != null) lines.close()
 }
 
 private[graft] object CdrLineScanner {

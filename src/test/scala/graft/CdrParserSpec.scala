@@ -3,8 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.io.Text
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sources.cdr.{CdrLineScanner, CdrScan, CdrTable, SerializableHadoopConf}
+import graft.sources.cdr.{CdrLineScanner, CdrScan, CdrTable}
 
 /** The `graft-cdr` reader against [[CdrTable.LinePattern]]: for every
   * line of a corpus of edge cases and random token strings, each
@@ -96,13 +98,13 @@ class CdrParserSpec extends GraftSuite {
 
   private val expected: Seq[Seq[Any]] = corpus.map(reference)
 
-  /** The corpus as one file, lines ended in turn by LF, CRLF and a lone
-    * CR (LF before an empty line, where a CR would pair with it). */
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_cdrparse").toString
+  /** Lines `from until to` of the corpus as the file `d/name`, lines
+    * ended in turn by LF, CRLF and a lone CR (LF before an empty line,
+    * where a CR would pair with it). */
+  private def writeLines(d: String, name: String, from: Int, to: Int): Unit = {
     val out = new java.io.ByteArrayOutputStream()
-    corpus.zipWithIndex.foreach { case (line, i) =>
-      out.write(line)
+    (from until to).foreach { i =>
+      out.write(corpus(i))
       val next = corpus.lift(i + 1)
       out.write(ascii(i % 3 match {
         case 1 => "\r\n"
@@ -110,7 +112,23 @@ class CdrParserSpec extends GraftSuite {
         case _ => "\n"
       }))
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/corpus.log"), out.toByteArray)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/$name"), out.toByteArray)
+  }
+
+  /** The corpus as one file. */
+  private lazy val dir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_cdrparse").toString
+    writeLines(d, "corpus.log", 0, corpus.size)
+    d
+  }
+
+  /** The corpus cut at line ends into files of 1, 3, 996 and the rest of
+    * the lines, so packing has small files and file tails to combine. */
+  private lazy val parts: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_cdrparts").toString
+    Seq(0, 1, 4, 1000, corpus.size).sliding(2).zipWithIndex.foreach {
+      case (Seq(from, to), k) => writeLines(d, s"part-$k.log", from, to)
+    }
     d
   }
 
@@ -156,22 +174,32 @@ class CdrParserSpec extends GraftSuite {
   }
 
   test("every byte-range split of the corpus reads the reference rows once") {
-    val conf = spark.sessionState.newHadoopConf()
     val schema = CdrTable.Schema
-    Seq(3L, 7L, 61L, 997L).foreach { splitBytes =>
+    val openCost = "spark.sql.files.openCostInBytes"
+    val priorCost = spark.conf.getOption(openCost)
+    // no open cost, so ranges of every size pack with their neighbours
+    spark.conf.set(openCost, "0")
+    try Seq(Some(3L), Some(7L), Some(61L), Some(997L), None).foreach { splitBytes =>
       projections.foreach { cols =>
         val pruned = org.apache.spark.sql.types.StructType(cols.map(schema(_)))
-        val scan = new CdrScan(dir, conf, splitBytes, pruned)
+        val scan = new CdrScan(spark, parts, splitBytes, pruned)
         val factory = scan.createReaderFactory()
-        val got = scan.planInputPartitions().toSeq.flatMap { p =>
+        def read(plan: Seq[InputPartition]): Seq[Seq[Any]] = plan.flatMap { p =>
           val reader = factory.createReader(p)
           try Iterator.continually(reader.next()).takeWhile(identity)
             .map(_ => values(reader.get(), pruned)).toList
           finally reader.close()
         }
-        assert(got == expected.map(project(_, cols)), s"splitBytes $splitBytes, projection $cols")
+        val packed = scan.planInputPartitions().toSeq.map(_.asInstanceOf[FilePartition])
+        val perRange = packed.flatMap(_.files).sortBy(f => (f.filePath.toString, f.start))
+          .map(f => FilePartition(0, Array(f)))
+        val clue = s"splitBytes $splitBytes, projection $cols"
+        assert(packed.size < perRange.size, clue)
+        assert(read(perRange) == expected.map(project(_, cols)), clue)
+        def counts(rows: Seq[Seq[Any]]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+        assert(counts(read(packed)) == counts(read(perRange)), clue)
       }
-    }
+    } finally priorCost.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
   }
 
   private def values(row: InternalRow, schema: org.apache.spark.sql.types.StructType): Seq[Any] =

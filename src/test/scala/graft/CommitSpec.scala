@@ -80,6 +80,28 @@ class CommitSpec extends GraftSuite {
     assert(localFs.listStatus(root).map(_.getPath.getName).toSeq == Seq("t"))
   }
 
+  test("swap: a concurrent recover between the two renames fails the swap, not the base") {
+    val root = tmpDir("commit_swap_race")
+    val dst = new Path(root, "t")
+    spark.range(4).toDF("id").write.parquet(dst.toString)
+    // another reader's recover lands just before the swap's rename(tmp, dst)
+    val raced = new FilterFileSystem(localFs) {
+      override def rename(src: Path, to: Path): Boolean = {
+        if (src.getName == "t_compact_tmp") Commit.recover(localFs, to)
+        super.rename(src, to)
+      }
+    }
+    val ex = intercept[IllegalStateException] {
+      Commit.swap(raced, dst) { tmp =>
+        spark.range(10, 12).toDF("id").write.parquet(tmp.toString)
+      }
+    }
+    assert(ex.getMessage.contains("concurrent recover"), ex.getMessage)
+    assert(ids(dst) == Seq(0L, 1L, 2L, 3L), "the restored base must stand")
+    assert(!localFs.exists(new Path(dst, "t_compact_tmp")), "the nested copy must be removed")
+    assert(localFs.listStatus(root).map(_.getPath.getName).toSeq == Seq("t"))
+  }
+
   test("commitOrReplay: a replay of the same multiset stands, a collision refuses, debris is replaced") {
     import spark.implicits._
     val fs = localFs

@@ -25,3 +25,28 @@ object TestBus {
     } finally sc.removeSparkListener(listener)
   }
 }
+
+/** Process starts seen by an in-process JFR recording. */
+object TestJfr {
+  import scala.jdk.CollectionConverters._
+
+  /** The command lines of the processes this JVM started while `body`
+    * ran, from a `jdk.ProcessStart` recording. */
+  def processStartsDuring[T](body: => T): (T, Seq[String]) = {
+    val recording = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("process-starts", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      val result = try body finally recording.stop()
+      recording.dump(dump)
+      val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+      (result, starts)
+    } finally {
+      recording.close()
+      java.nio.file.Files.delete(dump)
+    }
+  }
+}
